@@ -73,8 +73,12 @@ object Checkpoints {
     * checkpoint: a lazy `checkpoint()` re-computes the whole plan a
     * second time to write the checkpoint files, which costs more than
     * the one job this fusion saves. Callers MUST follow a cutLazy with
-    * a full-coverage action before branching on the frame — a partial
-    * action (isEmpty/take) would materialize only some partitions. */
+    * a full-coverage action before branching on the frame. A partial
+    * action (isEmpty/take) still gives correct results: it computes
+    * only the partitions it reads, and Spark's local checkpoint
+    * (LocalRDDCheckpointData) then runs a fill-in job for the rest.
+    * That fill-in is the extra job this method exists to remove — a
+    * cost in performance, never in correctness. */
   def cutLazy(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption(DirConf) match {

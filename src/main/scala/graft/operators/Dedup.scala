@@ -455,8 +455,9 @@ object Dedup {
     // pre-partitioned on the JOIN key before the one-time checkpoint:
     // a checkpoint materializes with its physical partitioning, so
     // every round's edges-side of the label join arrives co-located —
-    // the EDGE-sized shuffle (the term that made the 100M-edge
-    // ScaleCheck hop spill-bound) happens once here, never per round;
+    // the EDGE-sized shuffle (the term that made the 100M-edge hop
+    // spill-bound in ScaleCheck100 at commit 2375eab) happens once
+    // here, never per round;
     // only label-sized exchanges remain in the loop
     // lazy cut: the initial-label aggregate (via prevSum) reads every
     // edge partition, materializing this checkpoint in the same job
@@ -931,7 +932,8 @@ object Dedup {
     * fit only as the corpus distribution drifts — refitting stays an
     * offline decision, the Ivf.append contract. Cost: assignment is
     * one linear pass over the BATCH; the rework is Σ touched-cell²,
-    * tracking batch size, not corpus size (ScaleCheckSemantic). */
+    * tracking batch size, not corpus size (measured flat at 10× the
+    * corpus by ScaleCheckSemantic at commit 2375eab). */
   def semanticDedupAppend(spark: org.apache.spark.sql.SparkSession, path: String,
                           newEmb: DataFrame, tau: Double = 0.95): DataFrame =
     // single-writer ENFORCED (r16): two racing appends would both read

@@ -47,24 +47,13 @@ object Percentiles {
         .agg(count(lit(1)).as("cnt")),
       groupCol, ps)
 
-  /** The rank-selection core over an ALREADY-BUILT value histogram —
-    * (group, v, cnt) rows, `v` nullable. Exposed so derived statistics
-    * (e.g. [[Stats.madOutliers]]'s absolute-deviation median) can
-    * re-aggregate one corpus histogram instead of paying a second
-    * corpus scan: a |v − median| histogram is HISTOGRAM-sized work,
-    * the percentile machinery on top is identical. */
-  /** [[exactFromHistogram]] opened for the scale harness
-    * (tools/ScaleCheckQuantiles compares it against refinement). */
-  def exactFromHistogramPublic(hist0: DataFrame, groupCol: String,
-                               ps: Seq[(String, Double)]): DataFrame =
-    exactFromHistogram(hist0, groupCol, ps)
-
   /** [[exactMulti]]'s answers through r17 bucket-refinement selection
     * ([[Quantiles]]) — the plan for NEAR-UNIQUE value columns, where
     * the histogram's sort-window is corpus-sized and corpus-shuffled
-    * (ScaleCheckQuantiles: 105× the shuffled bytes at 10^8 rows).
-    * Same values bit-for-bit: identical `vLo + frac·(vHi−vLo)`
-    * interpolation at `p·(n−1)+1` over the same data values.
+    * (105× the shuffled bytes at 10^8 rows, measured by
+    * ScaleCheckQuantiles at commit 2375eab). Same values
+    * bit-for-bit: identical `vLo + frac·(vHi−vLo)` interpolation at
+    * `p·(n−1)+1` over the same data values.
     *
     * EAGER: the bounded refinement actions (seed + 1-2 bucket passes +
     * final resolve per value column, all quantiles of a column
@@ -134,9 +123,9 @@ object Percentiles {
     * shuffle — and bucket-refinement selection ([[Quantiles]]), whose
     * wire cost is ~flat at any corpus size and which therefore wins on
     * near-unique columns where the histogram IS the corpus
-    * (ScaleCheckQuantiles: 105× the shuffled bytes at 10^8 rows; at
-    * 100 TB the histogram plan on such a column is corpus-linear
-    * shuffle).
+    * (105× the shuffled bytes at 10^8 rows, measured by
+    * ScaleCheckQuantiles at commit 2375eab; at 100 TB the histogram
+    * plan on such a column is corpus-linear shuffle).
     *
     * The decision input is ONE group-sized probe pass per call:
     * count/min/max per (group, column) — exactly the refinement seed,
@@ -234,6 +223,12 @@ object Percentiles {
     joined.select(col(groupCol) +: specs.map(sp => col(sp._1)): _*)
   }
 
+  /** The rank-selection core over an ALREADY-BUILT value histogram —
+    * (group, v, cnt) rows, `v` nullable. Exposed so derived statistics
+    * (e.g. [[Stats.madOutliers]]'s absolute-deviation median) can
+    * re-aggregate one corpus histogram instead of paying a second
+    * corpus scan: a |v − median| histogram is HISTOGRAM-sized work,
+    * the percentile machinery on top is identical. */
   private[operators] def exactFromHistogram(hist0: DataFrame, groupCol: String,
                                             ps: Seq[(String, Double)]): DataFrame = {
     val hist = hist0

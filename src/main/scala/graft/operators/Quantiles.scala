@@ -35,9 +35,10 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * passes + final — every pass a map-side-combinable aggregation over
   * a column-pruned scan, shuffling one row per (group, target,
   * bucket): ~FLAT wire cost at any corpus size, vs the histogram
-  * plan's corpus-linear shuffle (ScaleCheckQuantiles: 105× fewer
-  * shuffled bytes at 10^8 near-unique rows). Several quantiles of one
-  * column share every pass (rows fan out per live target in-plan).
+  * plan's corpus-linear shuffle (105× fewer shuffled bytes at 10^8
+  * near-unique rows, measured by ScaleCheckQuantiles at commit
+  * 2375eab). Several quantiles of one column share every pass (rows
+  * fan out per live target in-plan).
   * The below-range count is RECOMPUTED with exact value comparisons
   * every pass, so float fuzz at bucket edges can never corrupt a rank
   * (the next range gets a one-bucket safety margin on each side
@@ -55,11 +56,11 @@ object Quantiles {
     * directly and skips the seed pass. */
   final case class Seed(g: Any, n1: Long, lo: Double, hi: Double)
 
-  /** Diagnostics from the LAST refinedMulti call on this JVM — test
-    * observability for the close condition (passes taken, rows the
-    * final resolve collected). Not part of the operator contract. */
+  /** Diagnostics of one refinement — observability for the close
+    * condition (passes taken, rows the final resolve collected),
+    * returned next to the result by [[refinedMultiWithStats]]. Not
+    * part of the operator contract. */
   final case class RefineStats(passes: Int, finalCollected: Long)
-  @volatile private[graft] var lastStats: RefineStats = RefineStats(0, 0L)
 
   /** Largest open-target count the refine passes inline as a literal
     * when-chain (vs the broadcast state join): plans stay small and the
@@ -84,7 +85,15 @@ object Quantiles {
     * one result per (group, index into `ps`). */
   def refinedMulti(rows: DataFrame, ps: Seq[Double], seed: Seq[Seed],
                    buckets: Int = 2048, finalThreshold: Long = 20000,
-                   maxPasses: Int = 16): Seq[((Any, Int), java.lang.Double)] = {
+                   maxPasses: Int = 16): Seq[((Any, Int), java.lang.Double)] =
+    refinedMultiWithStats(rows, ps, seed, buckets, finalThreshold,
+      maxPasses)._1
+
+  /** [[refinedMulti]] plus the [[RefineStats]] of this call. */
+  private[graft] def refinedMultiWithStats(
+      rows: DataFrame, ps: Seq[Double], seed: Seq[Seed], buckets: Int,
+      finalThreshold: Long, maxPasses: Int)
+      : (Seq[((Any, Int), java.lang.Double)], RefineStats) = {
     require(ps.nonEmpty, "Quantiles.refinedMulti: at least one quantile")
     val out = scala.collection.mutable.ArrayBuffer[((Any, Int), java.lang.Double)]()
     var open = Seq.empty[St]
@@ -220,7 +229,7 @@ object Quantiles {
     }
     ready ++= open // maxPasses hit: resolve whatever range remains
 
-    lastStats = RefineStats(passes, 0L)
+    var finalCollected = 0L
     // final pass: collect the surviving ranges' distinct values (plus
     // the exact below-range count) and resolve ranks on the driver
     if (ready.nonEmpty) {
@@ -232,7 +241,7 @@ object Quantiles {
           when(flag === 0, col("_v")).as("v"))
         .agg(count(lit(1)).as("c"))
         .collect()
-      lastStats = RefineStats(passes, collected.length.toLong)
+      finalCollected = collected.length.toLong
       val byKey = collected.groupBy(r => (r.get(0), r.getInt(1)))
       ready.foreach { s =>
         val rs = byKey.getOrElse((s.g, s.pi), Array.empty[Row])
@@ -258,7 +267,7 @@ object Quantiles {
         out += (((s.g, s.pi), vLo + s.frac * (vHi - vLo)))
       }
     }
-    out.toSeq
+    (out.toSeq, RefineStats(passes, finalCollected))
   }
 
   /** Driver-resolved (group → statistic) as a literal when-chain

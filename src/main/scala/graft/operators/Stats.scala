@@ -339,16 +339,12 @@ object Stats {
       // resolve per percentile) re-read this 2-column projection.
       // Persisting it wins when the projection fits executor storage
       // (the bench regime: repeated passes hit memory) and LOSES once
-      // the store spills — at corpus scale the right posture is to
-      // re-run the column-pruned scan per pass (ScaleCheckQuantiles
-      // measures both). `graft.quantiles.persist=false` picks the
-      // rescan posture; the persist (default) unpersists before the
-      // returned frame ever executes, so the tally re-plans from the
-      // pruned scan either way.
-      val doPersist = df.sparkSession.conf
-        .getOption("graft.quantiles.persist").forall(_.toBoolean)
-      if (doPersist)
-        rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // the store spills — at corpus scale re-running the column-pruned
+      // scan per pass is the better posture (ScaleCheckQuantiles at
+      // commit 2375eab measured both). The persist unpersists before
+      // the returned frame ever executes, so the tally re-plans from
+      // the pruned scan either way.
+      rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
       val seed = rows.groupBy("_g").agg(
           count(col("_v")).as("n1"), min("_v").as("lo"), max("_v").as("hi"),
@@ -413,7 +409,7 @@ object Stats {
               coalesce(sum(when(abs(col("_v") - col("_med")) > lit(k) * col("_mad"),
                 lit(1L))), lit(0L)).as("n_outliers"))
       }
-      } finally if (doPersist) rows.unpersist(blocking = false)
+      } finally rows.unpersist(blocking = false)
     } else {
       def median(in: DataFrame, c: String, out: String): DataFrame =
         in.groupBy(groupCol)

@@ -55,9 +55,10 @@ object Warc {
     // grouping packs small archives into very few splits (its per-core
     // budget counts a 4 MB open-cost the packing then ignores;
     // measured: 32 small shards on 32 cores parsed as ONE partition,
-    // ScaleCheckWarc). The glob listing is one driver metadata call —
-    // the same listing binaryFiles performs — and a 90k-shard crawl
-    // becomes 90k tasks, the format's natural parallelism unit.
+    // by ScaleCheckWarc at commit 2375eab). The glob listing is one
+    // driver metadata call — the same listing binaryFiles performs —
+    // and a 90k-shard crawl becomes 90k tasks, the format's natural
+    // parallelism unit.
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(pathGlob.replaceFirst("[*?\\[{].*$", "")),
       spark.sparkContext.hadoopConfiguration)

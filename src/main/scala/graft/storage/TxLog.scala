@@ -167,17 +167,6 @@ object TxLog {
 
   private val mapper = new ObjectMapper()
 
-  /** Conf-gated phase tracer (`graft.txlog.trace=true`): wall time of
-    * named verb sub-phases to stderr — attribution tooling for the
-    * commit path's fixed costs; zero overhead when off. */
-  private def trace[T](spark: SparkSession, tag: String)(f: => T): T =
-    if (!spark.conf.getOption("graft.txlog.trace").exists(_.toBoolean)) f
-    else {
-      val t0 = System.nanoTime()
-      try f finally System.err.println(
-        f"[txlog-trace] $tag%-36s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-    }
-
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
@@ -1399,9 +1388,10 @@ object TxLog {
       // ONE pass over the head's file list (plus one set build over the
       // base's): collect the ADDED files and the touched files' liveness
       // together — the decision is linear in table size with a small
-      // constant (ScaleCheckOcc: ~0.2 s at 10^6 entries), and it runs
-      // only on a LOST version race, where the alternative it replaces
-      // is recomputing the whole merge (discovery scan + rewrite)
+      // constant (~0.2 s at 10^6 entries, measured by ScaleCheckOcc at
+      // commit 2375eab), and it runs only on a LOST version race, where
+      // the alternative it replaces is recomputing the whole merge
+      // (discovery scan + rewrite)
       val baseSet = new java.util.HashSet[String](base.files.size * 2)
       base.files.foreach(baseSet.add)
       val missing = new java.util.HashSet[String](touchedFiles.size * 2)
@@ -1513,10 +1503,15 @@ object TxLog {
     // joins/aggs on the source key), and without the shuffle a
     // single-split upstream (one parquet file feeding the verb)
     // serializes the whole staged write into one task — the measured
-    // cause of q_txlog_hidden's 8→32-core anti-scaling. The TABLE
-    // property (when declared) wins over the session conf — resolved
-    // from the head manifest (cached); a create has no head yet and
-    // falls through to the session knob, then the layout default.
+    // cause of q_txlog_hidden's 8→32-core anti-scaling. Uniform holds
+    // for bucket IDS, not rows: a skewed source key still piles its
+    // rows into one bucket, and the shuffle sends that whole bucket to
+    // one task. A skewed bucket table opts out by declaring the
+    // `graft.optimizedWrite` table property ([[OptimizedWriteProp]])
+    // false. The TABLE property (when declared) wins over the session
+    // conf — resolved from the head manifest (cached); a create has no
+    // head yet and falls through to the session knob, then the layout
+    // default.
     val tablePref: Option[Boolean] = currentVersion(spark, path)
       .flatMap(v => propsOf(manifest(spark, path, v)).get(OptimizedWriteProp))
       .map(_.equalsIgnoreCase("true"))
@@ -1544,10 +1539,8 @@ object TxLog {
         org.apache.spark.sql.functions.col(
           "`" + c.replace("`", "``") + "`")): _*)
     val w = toWrite.write.mode("overwrite")
-    trace(spark, "  stageIn: parquet write") {
-      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
-        .parquet(staging.toString)
-    }
+    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+      .parquet(staging.toString)
     // a bucket transform's derivation IS Spark's own bucket id
     // (pmod(murmur3, n) — HashPartitioning.partitionIdExpression), so
     // staged names embed the id in Spark's `_%05d` bucket-file shape:
@@ -1582,10 +1575,8 @@ object TxLog {
           moved += relDst
         }
       }
-    trace(spark, "  stageIn: rename walk") {
-      walk(staging, "")
-      fs.delete(staging, true)
-    }
+    walk(staging, "")
+    fs.delete(staging, true)
     moved.toSeq
   }
 
@@ -1621,6 +1612,10 @@ object TxLog {
       Some(out.asScala.map { case (k, v) => k -> v.longValue }.toMap)
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Largest staged-file count [[collectStats]] reads footers for on
+    * the driver; above it the distributed counting aggregate runs. */
+  private val FooterStatsMaxFiles = 65536
+
   /** Per-file min/max for the tracked columns PLUS per-file row
     * counts, computed by ONE bounded aggregate over exactly the newly
     * staged files (grouped by input_file_name — page-cache-warm, never
@@ -1652,9 +1647,7 @@ object TxLog {
     // footer statistics truncate binary min/max and diverge on NaN
     // ordering, so they are not a safe substitute for the skip index.
     if (statsCols.isEmpty) {
-      val maxFooter = spark.conf.getOption("graft.txlog.footerStatsMaxFiles")
-        .map(_.toLong).getOrElse(65536L)
-      if (files.size <= maxFooter)
+      if (files.size <= FooterStatsMaxFiles)
         footerRowCounts(spark, path, files) match {
           case Some(rc) => return (Map.empty, rc, Map.empty)
           case None => () // unreadable footer: fall through to the job
@@ -1756,14 +1749,10 @@ object TxLog {
     require(currentVersion(df.sparkSession, path).isEmpty,
       s"TxLog: table already exists at $path")
     validateStatsCols(df.schema, statsCols, "TxLog.create")
-    val files = trace(df.sparkSession, "create: stageIn") {
-      stageIn(df, path, layout, transforms)
-    }
+    val files = stageIn(df, path, layout, transforms)
     val (stats, rowCounts, nullCounts) =
-      trace(df.sparkSession, "create: collectStats") {
-        collectStats(df.sparkSession, path, df.schema, statsCols, files,
-          recoverPartitions = transforms.isEmpty)
-      }
+      collectStats(df.sparkSession, path, df.schema, statsCols, files,
+        recoverPartitions = transforms.isEmpty)
     // a dead table recreated at this path must not serve the old
     // incarnation's cached snapshots
     cacheInvalidate(df.sparkSession, path)
@@ -1774,9 +1763,7 @@ object TxLog {
       minWriter =
         if (layout.size >= 2 || transforms.nonEmpty) 2 else 1,
       partitionSpec = transforms.map(_.spec))
-    trace(df.sparkSession, "create: writeManifest") {
-      writeManifest(df.sparkSession, path, m, operation = "CREATE")
-    }
+    writeManifest(df.sparkSession, path, m, operation = "CREATE")
     cachePut(df.sparkSession, path, m)
     1L
   }
@@ -3443,7 +3430,8 @@ object TxLog {
     * skip index: one tiny aggregate takes the batch's key bounds, and
     * only files whose min/max admit that range are scanned at all —
     * on a key-clustered dimension table the per-insert probe reads a
-    * few files, not the table (ScaleCheckGov prices this). The
+    * few files, not the table (ScaleCheckGov at commit 2375eab
+    * measured it flat from a 0.6M- to a 6M-row table). The
     * semi-join carries no broadcast hint: AQE broadcasts a small batch
     * side on its own, and a 10^6-key bulk load must NOT be forced
     * driver-side (ADVICE r8, low).
@@ -4556,7 +4544,6 @@ object TxLog {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       }
     try {
-    trace(spark, "merge: validation") {
     if (preValidated) {
       require(updatesAligned.filter(partNullFlag)
         .limit(1).collect().isEmpty,
@@ -4578,7 +4565,6 @@ object TxLog {
       require(viol.isNullAt(1),
         s"TxLog.mergeInto: duplicate update rows for key " +
           s"(${keys.mkString(",")})=(${if (viol.isNullAt(1)) "" else viol.getString(1)})")
-    }
     }
     // only the incoming side needs vetting: untouched rows passed at
     // their own commit, and a merge never changes them
@@ -4689,7 +4675,7 @@ object TxLog {
     // the file key is the _dv_key column, not input_file_name():
     // computed inside each single-source scan, it survives the DV
     // anti-join a deletion-vector-bearing snapshot adds to the plan
-    val hitUris: Array[String] = trace(spark, "merge: hit-file discovery") {
+    val hitUris: Array[String] =
       if (discoveryFiles.isEmpty) Array.empty
       else padNewCols(readFiles(spark, path, declared, discoveryFiles,
           m.colMap, m.dv, keepDvKey = true,
@@ -4697,7 +4683,6 @@ object TxLog {
         .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
         .join(updKeys, keys, "left_semi")
         .select("_gf").distinct().collect().map(_.getString(0))
-    }
     val resolve = entryResolver(m.files)
     val hitFiles = hitUris.map(resolve).toSet
     // merge = rows of the hit files with updates applied (updates win),
@@ -4707,9 +4692,8 @@ object TxLog {
     // fused validation aggregate at the top of this verb
     val merged = graft.operators.Upsert.mergeByKey(
       hitRows, updatesAligned, keys, preValidated = true)
-    val newFiles = trace(spark, "merge: rewrite+stageIn") {
+    val newFiles =
       stageIn(toPhysical(merged, m.colMap), path, physPartCols(m), transformsOf(m))
-    }
     // the read declaration is FILE-granular (mergeRebaseCheck): an
     // interleaved commit conflicts only when it touches what this
     // merge read/rewrites or adds files that may hold merged keys —
@@ -4729,13 +4713,11 @@ object TxLog {
         .unionByName(shaped(
           updatesAligned.join(matchedKeys, keys, "left_anti"), "insert"))
     })
-    trace(spark, "merge: commitRebase") {
-      commitRebase(spark, path, m, rewriteDirs = Set.empty,
-        newFiles = newFiles, schemaDdl = widened.toDDL, batchId = None,
-        readSet = None, operation = "MERGE", removeFiles = hitFiles, txn = txn,
-        rebaseCheck = Some(mergeRebaseCheck(widened, keyBounds, sourceEmpty,
-          discoveryFiles.toSet, hitFiles, tz)), cdc = cdc)
-    }
+    commitRebase(spark, path, m, rewriteDirs = Set.empty,
+      newFiles = newFiles, schemaDdl = widened.toDDL, batchId = None,
+      readSet = None, operation = "MERGE", removeFiles = hitFiles, txn = txn,
+      rebaseCheck = Some(mergeRebaseCheck(widened, keyBounds, sourceEmpty,
+        discoveryFiles.toSet, hitFiles, tz)), cdc = cdc)
     // every consumer of keyAgg (validation head, DV sidecar write, CDC
     // capture, hit-file collects) has executed by commit time — both
     // return paths release the cached key set through this finally

@@ -97,9 +97,8 @@ class QuantilesSpec extends SparkSpec {
     val rows = df.select(col("g").as("_g"), col("x").as("_v"))
     val seed = Seq(Quantiles.Seed("g", (n + 1).toLong, 0.0, 1e9))
     val threshold = 500L
-    val got = Quantiles.refined(rows, 0.5, seed,
-      buckets = 64, finalThreshold = threshold)
-    val stats = Quantiles.lastStats
+    val (got, stats) = Quantiles.refinedMultiWithStats(rows, Seq(0.5), seed,
+      buckets = 64, finalThreshold = threshold, maxPasses = 16)
     assert(stats.passes >= 2,
       s"heavy tail must not close on pass 1: $stats")
     assert(stats.finalCollected <= threshold * 2,

@@ -42,6 +42,12 @@ class CopyIntoSpec extends SparkSpec {
       s"re-run loaded $n2 files")
     assert(TxLog.read(spark, table).count() == 4L,
       "a re-run must not double-load")
+    // ledger rows for files outside the listing (loaded from elsewhere,
+    // since moved) leave the re-run a no-op
+    TxLog.append(Seq(("file:/elsewhere/crawl-0.parquet", 1L, 1L))
+      .toDF("file", "size", "mtime"), s"$table/_copy_into")
+    val (n2b, _) = CopyInto.copyInto(spark, table, src)
+    assert(n2b == 0, s"re-run over a grown ledger loaded $n2b files")
     // a NEW file loads alone
     writeSrcFile(src, "c.parquet", Seq((4L, 4.0)))
     val (n3, _) = CopyInto.copyInto(spark, table, src)

@@ -207,6 +207,21 @@ class TxLogHiddenSpec extends SparkSpec {
         s"bucketed equi-join still shuffles:\n${plan.take(2000)}")
       assert(plan.contains("SelectedBucketsCount") || plan.contains("Bucketed: true"),
         s"scan is not bucketed:\n${plan.take(2000)}")
+      // control: the same rows in plain TxLog tables join through a
+      // hash shuffle, so the no-Exchange pins here are not vacuous
+      val plainA = freshPath("bjpa")
+      val plainB = freshPath("bjpb")
+      TxLog.create(spark.range(0, 200).select(col("id").as("k"),
+        (col("id") * 1.0).as("va")).coalesce(1), plainA)
+      TxLog.create(spark.range(100, 300).select(col("id").as("k"),
+        (col("id") * 2.0).as("vb")).coalesce(1), plainB)
+      val jp = mount(plainA).join(mount(plainB), "k")
+        .select(col("k"), (col("va") + col("vb")).as("s"))
+      assert(jp.as[(Long, Double)].collect().toSet ==
+        (100L until 200L).map(k => (k, k * 3.0)).toSet)
+      assert(jp.queryExecution.executedPlan.toString
+        .contains("Exchange hashpartitioning"),
+        "plain join unexpectedly avoided the shuffle")
       // bucket files are written SORTED by the key: with Spark's
       // sorted-bucket-scan conf (and one file per bucket) the merge
       // join consumes the scans directly — zero Exchange, ZERO SORT —
