@@ -28,6 +28,16 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // every stage's task binary and every broadcast join serializes
+      // through one broadcast-block-sized buffer (4 MB by default)
+      // before it is trimmed to its real size (a few KB here). At 4 MB
+      // that buffer is a G1 HUMONGOUS object on heaps below 64 GB,
+      // taking fresh old-gen regions that only the next young GC frees,
+      // so a fast request loop touches heap it never needed: measured
+      // on a 2 GB driver heap, these buffers held ~300 MB of regions
+      // at each young GC. 256k keeps the buffer an ordinary young
+      // allocation; large broadcasts split into more pieces.
+      .config("spark.broadcast.blockSize", "256k")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(spark)

@@ -111,11 +111,6 @@ object Percentiles {
   val MaxHistogramDistinctConf = "graft.quantiles.maxHistogramDistinct"
   val MaxHistogramDistinctDefault = 10000000L
 
-  /** Plan each [[adaptiveExactMulti]] call actually took, per value
-    * column ("histogram" | "refinement") — test observability for the
-    * dispatch pin; not part of the operator contract. */
-  @volatile private[graft] var lastDispatch: Map[String, String] = Map.empty
-
   /** [[exactMulti]]'s answers behind a PLAN DISPATCHER (r17 verdict
     * #2): per value column, choose between the one-shuffle histogram
     * plan — optimal while the column's distinct count keeps the
@@ -149,7 +144,15 @@ object Percentiles {
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
 
   def adaptiveExactMulti(df: DataFrame, groupCol: String,
-                         specs: Seq[(String, String, Double)]): DataFrame = {
+                         specs: Seq[(String, String, Double)]): DataFrame =
+    adaptiveExactMultiWithDispatch(df, groupCol, specs)._1
+
+  /** [[adaptiveExactMulti]] plus the plan this call took per value
+    * column ("histogram" | "refinement"). Not part of the operator
+    * contract. */
+  private[graft] def adaptiveExactMultiWithDispatch(df: DataFrame,
+      groupCol: String, specs: Seq[(String, String, Double)])
+      : (DataFrame, Map[String, String]) = {
     require(specs.nonEmpty, "at least one (name, valueCol, p) spec required")
     val spark = df.sparkSession
     val maxDistinct = spark.conf.getOption(MaxHistogramDistinctConf)
@@ -165,8 +168,8 @@ object Percentiles {
       case Some(_) =>
         // every column stays on the histogram: no seeds needed, the
         // probe is pure overhead — skip it
-        lastDispatch = vcols.map(_ -> "histogram").toMap
-        return exactMulti(df, groupCol, specs)
+        return (exactMulti(df, groupCol, specs),
+          vcols.map(_ -> "histogram").toMap)
       case None => ()
     }
     val probeAggs = vcols.zipWithIndex.flatMap { case (vc, i) =>
@@ -191,8 +194,6 @@ object Percentiles {
     if (dispatchMemo.size > 256) dispatchMemo.clear() // bounded, advisory
     val (refCols, histCols) =
       vcols.partition(vc => distinctByCol(vc) > maxDistinct)
-    lastDispatch = vcols.map(vc => vc ->
-      (if (refCols.contains(vc)) "refinement" else "histogram")).toMap
     val histFrame = if (histCols.isEmpty) None else Some(
       exactMulti(df, groupCol, specs.filter(s => histCols.contains(s._2))))
     val refFrame = if (refCols.isEmpty) None else Some {
@@ -220,7 +221,9 @@ object Percentiles {
       a.join(b.withColumnRenamed(groupCol, "__g"),
         col(groupCol) <=> col("__g")).drop("__g")
     }
-    joined.select(col(groupCol) +: specs.map(sp => col(sp._1)): _*)
+    (joined.select(col(groupCol) +: specs.map(sp => col(sp._1)): _*),
+      vcols.map(vc => vc ->
+        (if (refCols.contains(vc)) "refinement" else "histogram")).toMap)
   }
 
   /** The rank-selection core over an ALREADY-BUILT value histogram —

@@ -273,13 +273,13 @@ object Similarity {
     * quality gate for tuning tables/planes (LSH) and nlist/nprobe
     * (IVF). A qid with no approx rows scores 0, not a dropped row. */
   def recallAtK(exact: DataFrame, approx: DataFrame): DataFrame =
-    // the approx side is ≤ k·|Q| rows (an eval batch, never a table):
-    // broadcast it so the join skips BOTH sides' (qid, vec_id) sort +
-    // exchange, and the exact side's existing qid partitioning (from
-    // its top-k) feeds the groupBy directly (guide §3.1/§2.4)
+    // no join hint: the approx side is usually ≤ k·|Q| rows and AQE
+    // broadcasts it from its measured size (the join then skips both
+    // sides' (qid, vec_id) sort + exchange), while an approx side too
+    // big to broadcast falls back to a sort-merge join instead of
+    // building a driver-sized hash table
     exact.select(col("qid"), col("vec_id"))
-      .join(broadcast(
-          approx.select(col("qid"), col("vec_id")).withColumn("_hit", lit(1))),
+      .join(approx.select(col("qid"), col("vec_id")).withColumn("_hit", lit(1)),
         Seq("qid", "vec_id"), "left")
       .groupBy("qid")
       .agg((sum(coalesce(col("_hit"), lit(0))).cast("double") / count(lit(1)))

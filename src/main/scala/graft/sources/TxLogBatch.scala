@@ -32,10 +32,20 @@ import graft.storage.TxLog
   *    without stats are conservatively kept — pruning is an
   *    optimization, never a filter (the exact predicate still runs on
   *    the scan).
+  *
+  * [[TxLog.read]] and every TxLog verb that reads a snapshot scan
+  * through the same index ([[TxLogBatch.relation]]): building such a
+  * read stats the manifest's files on the driver and runs no Spark job.
+  *
+  * `wholeVersion` says that `m` lists every file of version
+  * `m.version`: that version's columnar checkpoint may then serve
+  * planning above the distributed threshold. A file subset plans on
+  * the driver — a checkpoint enumerates the whole version.
   */
 class TxLogFileIndex(spark: SparkSession,
                      private[graft] val tablePath: String,
-                     private[graft] val m: TxLog.Manifest) extends FileIndex {
+                     private[graft] val m: TxLog.Manifest,
+                     wholeVersion: Boolean) extends FileIndex {
   import TxLogFileIndex.{admitsNull, admitsTagged, dirPartOfEntry, partitionValuesOf}
 
   private val declared = StructType.fromDDL(m.schemaDdl)
@@ -81,8 +91,11 @@ class TxLogFileIndex(spark: SparkSession,
     * every later planning) covers versions between interval
     * checkpoints. A failed write degrades to the driver walk. */
   private lazy val distributed: Boolean =
-    m.files.size >= distributedThreshold &&
-      TxLog.ensureCheckpoint(spark, tablePath, m)
+    wholeVersion && m.files.size >= distributedThreshold &&
+      // the logged manifest, not `m`: a reader's view of it (physical
+      // names, its own DV state) must never become the checkpoint
+      TxLog.ensureCheckpoint(spark, tablePath,
+        TxLog.manifest(spark, tablePath, m.version))
 
   /** One FileStatus per manifest entry — resolved once at first
     * DRIVER-path planning (file-count-bounded driver work, same class
@@ -615,6 +628,27 @@ class TxLogParquetFileFormat(
 }
 
 object TxLogBatch {
+  /** Spark's own `HadoopFsRelation` over a [[TxLogFileIndex]] on `m` —
+    * the one plan the `graft-txlog` format door, the `graft.*` catalog
+    * and [[TxLog.read]] all scan through. HIDDEN layouts surface no
+    * partition columns (the dirs spell derived transform values and the
+    * raw data is complete in the files), so their data schema is the
+    * whole declared schema. */
+  def relation(spark: SparkSession, path: String, m: TxLog.Manifest,
+               wholeVersion: Boolean,
+               fileFormat: org.apache.spark.sql.execution.datasources.FileFormat,
+               bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = None,
+               options: Map[String, String] = Map.empty)
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
+    val index = new TxLogFileIndex(spark, path, m, wholeVersion)
+    val partCols = index.partitionSchema.fieldNames.toSet
+    org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+      partitionSchema = index.partitionSchema,
+      dataSchema = StructType(StructType.fromDDL(m.schemaDdl)
+        .filterNot(f => partCols(f.name))),
+      bucketSpec = bucketSpec, fileFormat = fileFormat, options = options)(spark)
+  }
+
   /** Driver-side load of a snapshot's deletion vectors into
     * (file-key → SORTED deleted row indexes) — delete-sized, the same
     * rows [[TxLog.read]]'s anti-join streams, collected once and
@@ -809,7 +843,9 @@ object TxLogBatch {
   * Spark re-evaluates all filters above the relation (the default
   * `unhandledFilters` contract), so a partially-translated predicate
   * stays exact. Row-based by construction — the transitional state a
-  * compact/OPTIMIZE resolves back to the columnar mount. */
+  * compact/OPTIMIZE resolves back to the columnar mount. [[TxLog.read]]
+  * builds its [[TxLogBatch.relation]] directly, never through the
+  * `graft-txlog` provider, so this fallback cannot recurse. */
 class TxLogJoinRelation(spark: SparkSession,
                         private[graft] val path: String,
                         private[graft] val m: TxLog.Manifest)

@@ -106,23 +106,7 @@ class TxLogStream extends StreamSourceProvider with StreamSinkProvider
     // distributed anti-join seam instead of a driver-side collect
     if (TxLogBatch.dvRowCount(m) > TxLogBatch.dvBroadcastMaxRows(spark))
       return new TxLogJoinRelation(spark, path, m)
-    val declared = StructType.fromDDL(m.schemaDdl)
-    // HIDDEN layouts surface no partition columns: the dirs spell
-    // derived transform values, the raw data is complete in the files,
-    // and pruning rides the index's transform translation
-    val partitionSchema =
-      if (m.partitionSpec.nonEmpty) new StructType()
-      else StructType(m.partitionCols.map(declared.apply))
-    val dataSchema =
-      if (m.partitionSpec.nonEmpty) declared
-      else StructType(declared.filterNot(f => m.partitionCols.contains(f.name)))
-    org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      new TxLogFileIndex(spark, path, m),
-      partitionSchema = partitionSchema,
-      dataSchema = dataSchema,
-      // bucket(n, c) hidden layouts mount as REAL bucketed relations:
-      // joins/aggs on c plan shuffle-free (see TxLogBatch.bucketSpecOf)
-      bucketSpec = TxLogBatch.bucketSpecOf(m),
+    TxLogBatch.relation(spark, path, m, wholeVersion = true,
       // DV-bearing or column-mapped snapshots read through the
       // manifest-aware format (DV rows filtered per file at scan time;
       // logical→physical rename translation on schemas and pushed
@@ -132,7 +116,10 @@ class TxLogStream extends StreamSourceProvider with StreamSinkProvider
           new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
         else new TxLogParquetFileFormat(path, m.colMap, m.dv.map(_._1),
           TxLogBatch.dvBroadcastFor(spark, path, m)),
-      options = parameters)(spark)
+      // bucket(n, c) hidden layouts mount as REAL bucketed relations:
+      // joins/aggs on c plan shuffle-free (see TxLogBatch.bucketSpecOf)
+      bucketSpec = TxLogBatch.bucketSpecOf(m),
+      options = parameters)
   }
 
   /** `df.write.format("graft-txlog").mode(...)` — batch writes map to

@@ -2131,21 +2131,23 @@ object TxLog {
     -1L // unreachable
   }
 
-  /** Read a version (default: newest). Plans from the manifest's
-    * explicit file list with `basePath` set, so the partition column
-    * is recovered and partition/column pruning behave exactly as on a
-    * directly-written parquet table. The result carries the version's
-    * DECLARED schema: parquet reads append partition columns LAST and
-    * infer their type from the directory names (a long partition
-    * column would come back int) — the final projection restores the
-    * manifest's column order and types, so round trips are
+  /** Read a version (default: newest). Scans Spark's own
+    * `HadoopFsRelation` over [[graft.sources.TxLogFileIndex]] — the
+    * plan the `graft-txlog` format door and the `graft.*` catalog
+    * mount — so the manifest IS the file list: building the read runs
+    * no Spark job, and filters on the result prune partitions and skip
+    * files by the manifest's min/max stats. The result carries the
+    * version's DECLARED schema, all columns nullable as on any parquet
+    * read: partition values parse from the directory names straight
+    * to their declared type, and the final projection restores the
+    * manifest's column order and logical names, so round trips are
     * schema-exact. */
   def read(spark: SparkSession, path: String,
            version: Option[Long] = None): DataFrame = {
     val v = version.orElse(currentVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
     val m = manifest(spark, path, v)
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), m.files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    readFiles(spark, path, m, m.files)
   }
 
   /** [[read]] plus the row-POSITION metadata columns: `_file` (the
@@ -2162,104 +2164,67 @@ object TxLog {
     val v = version.orElse(currentVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
     val m = manifest(spark, path, v)
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), m.files,
-        m.colMap, m.dv, keepDvKey = true,
-        recoverPartitions = m.partitionSpec.isEmpty)
+    readFiles(spark, path, m, m.files, keepDvKey = true)
       .withColumn("_pos", col("_dv_idx").cast("long"))
       .withColumnRenamed("_dv_key", "_file")
       .drop("_dv_idx")
   }
 
-  /** Plan a read over an explicit file list under this table's data
-    * dir, returning the DECLARED schema (shared by [[read]] and
-    * [[appendsSince]]). */
-  /** `schema` is the LOGICAL schema to return; `colMap` maps renamed
-    * logical columns to the physical names the files spell — the scan
-    * reads physical, the final projection aliases back to logical, so
-    * a rename is invisible to every caller downstream. `dv` is the
-    * version's deletion-vector state: rows listed in a DV anti-join
-    * away before the final projection, so EVERY consumer of a
-    * DV-bearing snapshot (reads, merges, probes, CDF, compaction)
-    * sees the post-delete view through this one seam. */
-  private def readFiles(spark: SparkSession, path: String,
-                        schema: StructType, files: Seq[String],
-                        colMap: Seq[(String, String)] = Nil,
-                        dv: Seq[(String, Map[String, Long])] = Nil,
-                        keepDvKey: Boolean = false,
-                        recoverPartitions: Boolean = true): DataFrame =
+  /** Plan a read of `files` (entries of `m`) returning `m`'s LOGICAL
+    * schema — the one seam every snapshot read goes through ([[read]],
+    * [[appendsSince]], merge/update/delete discovery, CDF, compaction).
+    * The scan reads a view of `m` in the files' PHYSICAL spelling
+    * (renamed columns under their original names, so partition dirs,
+    * stats keys and the schema agree without a rename map), and the
+    * final projection aliases back to logical names, so a rename is
+    * invisible downstream. Rows listed in `m.dv` (the deletion-vector
+    * state) anti-join away before the final projection, so EVERY
+    * consumer of a DV-bearing snapshot sees the post-delete view
+    * through this one seam. */
+  private def readFiles(spark: SparkSession, path: String, m: Manifest,
+                        files: Seq[String],
+                        keepDvKey: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    val schema = StructType.fromDDL(m.schemaDdl)
     if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
-    else {
-      val physical = physicalize(schema, colMap)
-      val base = dataDir(path).toString
-      // DVs relevant to THIS file subset only; a DV-free read stays
-      // the plain scan (no metadata columns, no join)
-      val fileSet = files.toSet
-      val dvRelevant = dv.filter(_._2.keys.exists(fileSet))
-      val needKey = dvRelevant.nonEmpty || keepDvKey
-      // files group by their data ROOT: the table's own data dir for
-      // relative entries, the SOURCE table's data dir for a shallow
-      // clone's absolute references. Each root reads with its own
-      // basePath (so partition values still parse from the directory
-      // names they actually sit under) and the groups union — a
-      // plain-relative table stays a single scan.
-      val groups = files.groupBy { f =>
-        if (!isAbsEntry(f)) base
-        else {
-          val i = f.lastIndexOf("/data/")
-          if (i >= 0) f.substring(0, i + "/data".length)
-          else f.split('/').dropRight(1).mkString("/")
-        }
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    // DVs relevant to THIS file subset only; a DV-free read stays
+    // the plain scan (no metadata columns, no join)
+    val fileSet = files.toSet
+    val dvRelevant = m.dv.filter(_._2.keys.exists(fileSet))
+    val view = m.copy(files = files,
+      schemaDdl = org.apache.spark.sql.graftbridge.ExprBridge.asNullable(
+        physicalize(schema, m.colMap)).toDDL,
+      partitionCols = physPartCols(m), colMap = Nil, dv = Nil)
+    val scan = spark.baseRelationToDataFrame(graft.sources.TxLogBatch.relation(
+      spark, path, view,
+      wholeVersion = fileSet.size == m.files.size && m.files.forall(fileSet),
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat))
+    val scanned =
+      if (dvRelevant.isEmpty && !keepDvKey) scan
+      else scan
+        // the same file key the DV writer computed: data-root-relative
+        // suffix (identical for relative entries and clone refs)
+        .withColumn("_dv_key", expr("substring_index(input_file_name(), '/data/', -1)"))
+        .withColumn("_dv_idx", col("_metadata.row_index"))
+    val filtered =
+      if (dvRelevant.isEmpty) scanned
+      else {
+        val dvDf = spark.read
+          .parquet(dvRelevant.map { case (f, _) => dvPath(path, f) }: _*)
+          .select(col("f").as("_dv_key"), col("row_index").as("_dv_idx"))
+        // DV rows are delete-sized: AQE broadcasts the anti-join side
+        scanned.join(dvDf, Seq("_dv_key", "_dv_idx"), "left_anti")
       }
-      // the DECLARED schema rides into the reader: partition values
-      // parse from the raw directory string directly to their declared
-      // type (a string partition keeps "01" as "01" — inference alone
-      // would read INT 1 and a cast-back would corrupt it to "1")
-      val scanned = groups.toSeq.sortBy(_._1).map { case (root, fs) =>
-        // hidden-partitioned tables skip basePath: the dirs spell
-        // DERIVED transform values (not schema columns) and the raw
-        // data is complete in the files — nothing to recover
-        val reader0 = spark.read.schema(physical)
-        val reader =
-          if (recoverPartitions) reader0.option("basePath", root) else reader0
-        val scan = reader
-          .parquet(fs.map(f => if (isAbsEntry(f)) f else s"$root/$f"): _*)
-        if (!needKey) scan
-        else scan
-          // the same file key the DV writer computed: data-root-relative
-          // suffix (identical for relative entries and clone refs) —
-          // resolved per scan group, where _metadata still binds
-          .withColumn("_dv_key", org.apache.spark.sql.functions.expr(
-            "substring_index(input_file_name(), '/data/', -1)"))
-          .withColumn("_dv_idx",
-            org.apache.spark.sql.functions.col("_metadata.row_index"))
-      }.reduce(_ unionByName _)
-      val filtered =
-        if (dvRelevant.isEmpty) scanned
-        else {
-          val dvDf = spark.read
-            .parquet(dvRelevant.map { case (f, _) => dvPath(path, f) }: _*)
-            .select(org.apache.spark.sql.functions.col("f").as("_dv_key"),
-              org.apache.spark.sql.functions.col("row_index").as("_dv_idx"))
-          // DV rows are delete-sized: AQE broadcasts the anti-join side
-          scanned.join(dvDf, Seq("_dv_key", "_dv_idx"), "left_anti")
-        }
-      val projection = schema.fields.map { f =>
-        // backtick-quoted so dotted/spaced column names never
-        // mis-parse (same contract as Profile); the projection
-        // restores the declared column ORDER (parquet reads append
-        // partition columns last) AND the LOGICAL names (renamed
-        // columns read from their physical name)
-        val phys = colMap.find(_._1 == f.name).map(_._2).getOrElse(f.name)
-        org.apache.spark.sql.functions
-          .col("`" + phys.replace("`", "``") + "`").as(f.name)
-      }
-      filtered.select((projection ++ (if (keepDvKey)
-        Seq(org.apache.spark.sql.functions.col("_dv_key"),
-          org.apache.spark.sql.functions.col("_dv_idx"))
-        else Nil)).toIndexedSeq: _*)
-    }
+    // backtick-quoted so dotted/spaced column names never mis-parse
+    // (same contract as Profile); restores the declared column ORDER
+    // (partition columns scan last) and the LOGICAL names
+    val projection = schema.fields.map(f =>
+      col("`" + physOf(m, f.name).replace("`", "``") + "`").as(f.name))
+    filtered.select((projection ++ (if (keepDvKey)
+      Seq(col("_dv_key"), col("_dv_idx")) else Nil)).toIndexedSeq: _*)
+  }
 
   /** A DV file reference resolves like a data entry: table-relative
     * under `_dv/`, or absolute (a shallow clone's pointer into the
@@ -2490,7 +2455,7 @@ object TxLog {
     val files = prunedFiles(spark, path, colName, lower, upper, Some(v))
     import org.apache.spark.sql.functions.lit
     // a variant-path column filters through its declared extraction
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    readFiles(spark, path, m, files)
       .filter(statsColExpr(colName).between(lit(lower), lit(upper)))
   }
 
@@ -2528,9 +2493,7 @@ object TxLog {
         s"v$sinceVersion and v$to — history is not append-only over " +
         "this range; consume TxLog.changes instead")
     val fromSet = mFrom.files.toSet
-    readFiles(spark, path, StructType.fromDDL(mTo.schemaDdl),
-      mTo.files.filterNot(fromSet), mTo.colMap, mTo.dv,
-      recoverPartitions = mTo.partitionSpec.isEmpty)
+    readFiles(spark, path, mTo, mTo.files.filterNot(fromSet))
   }
 
   /** Files ADDED by version `v` over its predecessor — the
@@ -2558,7 +2521,7 @@ object TxLog {
   private[graft] def readFileList(spark: SparkSession, path: String,
                                   version: Long, files: Seq[String]): DataFrame = {
     val m = manifest(spark, path, version)
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    readFiles(spark, path, m, files)
   }
 
   /** Additive-only schema widening: every declared column keeps its
@@ -3488,7 +3451,7 @@ object TxLog {
               spark.sessionState.conf.sessionLocalTimeZone)
           } else existingFiles
         if (candidates.nonEmpty) {
-          val collide = readFiles(spark, path, schema, candidates, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+          val collide = readFiles(spark, path, m, candidates)
             .select(cols.map(col): _*)
             .join(df.select(cols.map(col): _*).distinct(), cols, "left_semi")
             .limit(1).collect()
@@ -4407,7 +4370,7 @@ object TxLog {
     // count and the union executes as a single Spark job — compaction
     // cost scales with rewritten bytes, not with partition count
     val pieces = todo.toSeq.sortBy(_._1).map { case (_, files) =>
-      val part = readFiles(spark, path, schema, files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+      val part = readFiles(spark, path, m, files)
       val bytes = part.queryExecution.optimizedPlan.stats.sizeInBytes
       val n = ((bytes + BigInt(targetBytesPerFile) - 1) / targetBytesPerFile)
         .max(1).toInt
@@ -4619,9 +4582,7 @@ object TxLog {
       val addDv =
         if (discoveryFiles.isEmpty) Nil // pure insert
         else {
-          padNewCols(readFiles(spark, path, declared, discoveryFiles,
-              m.colMap, m.dv, keepDvKey = true,
-              recoverPartitions = m.partitionSpec.isEmpty))
+          padNewCols(readFiles(spark, path, m, discoveryFiles, keepDvKey = true))
             .select(keys.map(col) :+ col("_dv_key") :+ col("_dv_idx"): _*)
             .join(updKeys, keys, "left_semi")
             .select(col("_dv_key").as("f"),
@@ -4650,9 +4611,7 @@ object TxLog {
       // that built the DV) as preimages, their update rows as
       // postimages, the rest of the batch as inserts
       val cdc = captureCdc(spark, path, m, {
-        val oldMatched = padNewCols(readFiles(spark, path, declared,
-            discoveryFiles, m.colMap, m.dv,
-            recoverPartitions = m.partitionSpec.isEmpty))
+        val oldMatched = padNewCols(readFiles(spark, path, m, discoveryFiles))
           .join(updKeys, keys, "left_semi")
         val matchedKeys = oldMatched.select(keys.map(col): _*).distinct()
         def shaped(df: DataFrame, t: String) =
@@ -4677,9 +4636,7 @@ object TxLog {
     // anti-join a deletion-vector-bearing snapshot adds to the plan
     val hitUris: Array[String] =
       if (discoveryFiles.isEmpty) Array.empty
-      else padNewCols(readFiles(spark, path, declared, discoveryFiles,
-          m.colMap, m.dv, keepDvKey = true,
-          recoverPartitions = m.partitionSpec.isEmpty))
+      else padNewCols(readFiles(spark, path, m, discoveryFiles, keepDvKey = true))
         .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
         .join(updKeys, keys, "left_semi")
         .select("_gf").distinct().collect().map(_.getString(0))
@@ -4687,7 +4644,7 @@ object TxLog {
     val hitFiles = hitUris.map(resolve).toSet
     // merge = rows of the hit files with updates applied (updates win),
     // plus inserts; staged per-partition so moved keys land right
-    val hitRows = padNewCols(readFiles(spark, path, declared, hitFiles.toSeq, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty))
+    val hitRows = padNewCols(readFiles(spark, path, m, hitFiles.toSeq))
     // preValidated = true: within-batch uniqueness was vetted by the
     // fused validation aggregate at the top of this verb
     val merged = graft.operators.Upsert.mergeByKey(
@@ -4972,8 +4929,7 @@ object TxLog {
     // source row whose key exists in the table must still not insert
     val insertsAndClaims: Option[(DataFrame, Map[String, (Long, Long)])] =
       notMatched.headOption.map { c =>
-        val existingKeys = readFiles(spark, path, declared, discoveryFiles,
-            m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+        val existingKeys = readFiles(spark, path, m, discoveryFiles)
           .select(keys.map(col): _*).distinct()
         val landed = source
           .withColumn("src", struct(source.columns.map(col): _*))
@@ -5023,9 +4979,7 @@ object TxLog {
       val fsx = fsFor(spark, path)
       try {
         if (scanFiles.nonEmpty)
-          padNewCols(readFiles(spark, path, declared, scanFiles, m.colMap,
-              m.dv, keepDvKey = true,
-              recoverPartitions = m.partitionSpec.isEmpty))
+          padNewCols(readFiles(spark, path, m, scanFiles, keepDvKey = true))
             .join(srcStructed, keys.toSeq, "left_outer")
             .withColumn("_act", actCol)
             .filter(col("_act") =!= -1)
@@ -5092,8 +5046,7 @@ object TxLog {
       if (discoveryFiles.isEmpty || matched.isEmpty) Set.empty
       else {
         val resolve = entryResolver(m.files)
-        readFiles(spark, path, declared, discoveryFiles, m.colMap, m.dv,
-            keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+        readFiles(spark, path, m, discoveryFiles, keepDvKey = true)
           .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
           .join(srcKeys, keys, "left_semi")
           .select("_gf").distinct().collect().map(r => resolve(r.getString(0)))
@@ -5101,9 +5054,7 @@ object TxLog {
       }
     val scopeFiles: Set[String] =
       if (notMatchedBySource.nonEmpty) m.files.toSet else hitFiles
-    val scopeRows = padNewCols(readFiles(spark, path, declared,
-      scopeFiles.toSeq, m.colMap, m.dv,
-      recoverPartitions = m.partitionSpec.isEmpty))
+    val scopeRows = padNewCols(readFiles(spark, path, m, scopeFiles.toSeq))
     val acted = scopeRows.join(srcStructed, keys.toSeq, "left_outer")
       .withColumn("_act", actCol)
     val rewritten = applyUpdates(
@@ -5242,8 +5193,7 @@ object TxLog {
     val cdc = captureCdc(spark, path, m, {
       val declared = StructType.fromDDL(m.schemaDdl)
       val replaced = m.files.filter(f => replaceDirs.contains(dirOf(f)))
-      readFiles(spark, path, declared, replaced, m.colMap, m.dv,
-          recoverPartitions = m.partitionSpec.isEmpty)
+      readFiles(spark, path, m, replaced)
         .select(declared.fieldNames.map(col).toIndexedSeq
           :+ lit("delete").as("_change_type"): _*)
         .unionByName(df.select(declared.fieldNames.map(col).toIndexedSeq
@@ -5305,8 +5255,7 @@ object TxLog {
     if (deletionVectors || dvDeclared(m)) {
       // rows to delete, keyed exactly as reads key them — existing DVs
       // already filtered, so a row can never be deleted twice
-      val newDel = readFiles(spark, path, schema, m.files, m.colMap, m.dv,
-        keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+      val newDel = readFiles(spark, path, m, m.files, keepDvKey = true)
         .filter(hit)
         .select(col("_dv_key").as("f"), col("_dv_idx").cast("long").as("row_index"))
       // write FIRST, count from the written sidecar: one table-sized
@@ -5344,9 +5293,7 @@ object TxLog {
       // DV-targeted files
       val cdc = captureCdc(spark, path, m, {
         val sidecar = spark.read.parquet(dvPath(path, dvName))
-        val rows = readFiles(spark, path, schema, dvTargets.toSeq,
-          m.colMap, m.dv, keepDvKey = true,
-          recoverPartitions = m.partitionSpec.isEmpty)
+        val rows = readFiles(spark, path, m, dvTargets.toSeq, keepDvKey = true)
         rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
             rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi")
           .select(schema.fieldNames.map(col).toIndexedSeq
@@ -5361,15 +5308,14 @@ object TxLog {
       // exact hit-file discovery: the scan prunes to the condition's
       // columns; the collected set is bounded by the live file count
       // (_dv_key, not input_file_name — it survives the DV anti-join)
-      val uris = readFiles(spark, path, schema, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+      val uris = readFiles(spark, path, m, m.files, keepDvKey = true)
         .filter(hit).select(col("_dv_key").as("_f"))
         .distinct().collect().map(_.getString(0))
       if (uris.isEmpty) return v
       val resolve = entryResolver(m.files)
       val hitFiles = uris.map(resolve).toSet
       val newFiles = stageIn(
-        toPhysical(readFiles(spark, path, schema, hitFiles.toSeq, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+        toPhysical(readFiles(spark, path, m, hitFiles.toSeq)
           .filter(not(hit)), m.colMap),
         path, physPartCols(m), transformsOf(m))
       // file-granular read declaration: the files this delete REWRITES
@@ -5378,8 +5324,7 @@ object TxLog {
       // an un-hit file cannot create matches — and files added by a
       // NON-blind commit conflict ([[predicateRebaseCheck]])
       val cdc = captureCdc(spark, path, m,
-        readFiles(spark, path, schema, hitFiles.toSeq, m.colMap, m.dv,
-            recoverPartitions = m.partitionSpec.isEmpty)
+        readFiles(spark, path, m, hitFiles.toSeq)
           .filter(hit)
           .select(schema.fieldNames.map(col).toIndexedSeq
             :+ lit("delete").as("_change_type"): _*))
@@ -5432,8 +5377,7 @@ object TxLog {
           "the predicate — an overwrite of a region must stay inside it")
       enforceConstraints(df, m.constraints, "replaceWhere")
       // hit-file discovery, the deleteWhere shape
-      val uris = readFiles(spark, path, declared, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+      val uris = readFiles(spark, path, m, m.files, keepDvKey = true)
         .filter(hit).select(col("_dv_key").as("_f"))
         .distinct().collect().map(_.getString(0))
       val resolve = entryResolver(m.files)
@@ -5444,9 +5388,7 @@ object TxLog {
       enforceUniques(df, spark, path, declared,
         m.files.filterNot(hitFiles.contains), m, "replaceWhere")
       if (hitFiles.nonEmpty && m.uniques.nonEmpty) {
-        val survivorRows = readFiles(spark, path, declared,
-          hitFiles.toSeq, m.colMap, m.dv,
-          recoverPartitions = m.partitionSpec.isEmpty).filter(not(hit))
+        val survivorRows = readFiles(spark, path, m, hitFiles.toSeq).filter(not(hit))
         m.uniques.foreach { case (name, cols) =>
           val collided = df.select(cols.map(col).toIndexedSeq: _*)
             .join(survivorRows.select(cols.map(col).toIndexedSeq: _*), cols)
@@ -5460,8 +5402,7 @@ object TxLog {
       val survivors =
         if (hitFiles.isEmpty) Nil
         else stageIn(
-          toPhysical(readFiles(spark, path, declared, hitFiles.toSeq,
-            m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+          toPhysical(readFiles(spark, path, m, hitFiles.toSeq)
             .filter(not(hit)), m.colMap),
           path, physPartCols(m), transformsOf(m))
       val incoming = stageIn(toPhysical(df, m.colMap), path,
@@ -5469,8 +5410,7 @@ object TxLog {
       // write-time CDC: the replaced region's rows as deletes, the
       // incoming batch as inserts
       val cdc = captureCdc(spark, path, m,
-        readFiles(spark, path, declared, hitFiles.toSeq, m.colMap, m.dv,
-            recoverPartitions = m.partitionSpec.isEmpty)
+        readFiles(spark, path, m, hitFiles.toSeq)
           .filter(hit)
           .select(declared.fieldNames.map(col).toIndexedSeq
             :+ lit("delete").as("_change_type"): _*)
@@ -5555,8 +5495,7 @@ object TxLog {
         s"_tmp_update_${java.util.UUID.randomUUID().toString.take(12)}")
       val fs = fsFor(spark, path)
       try {
-        readFiles(spark, path, schema, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+        readFiles(spark, path, m, m.files, keepDvKey = true)
           .filter(hit).write.parquet(tmp.toString)
         val matched = spark.read.parquet(tmp.toString)
         if (matched.isEmpty) return v
@@ -5601,15 +5540,13 @@ object TxLog {
       } finally fs.delete(tmp, true)
     } else {
       // exact hit-file discovery, identical to DELETE's
-      val uris = readFiles(spark, path, schema, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+      val uris = readFiles(spark, path, m, m.files, keepDvKey = true)
         .filter(hit).select(col("_dv_key").as("_f"))
         .distinct().collect().map(_.getString(0))
       if (uris.isEmpty) return v
       val resolve = entryResolver(m.files)
       val hitFiles = uris.map(resolve).toSet
-      val snap = readFiles(spark, path, schema, hitFiles.toSeq, m.colMap,
-        m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+      val snap = readFiles(spark, path, m, hitFiles.toSeq)
       enforceConstraints(assigned(snap.filter(hit), everyRowMatched = true),
         m.constraints, "updateWhere")
       val newFiles = stageIn(
@@ -5892,10 +5829,8 @@ object TxLog {
       // appended files carry no DV at their birth commit (dv = Nil);
       // a CLONE's (or a restore endpoint's) rode in on its Src so the
       // lane's live rows scan through that side's DV state
-      val df = readFiles(spark, path, vSchema,
-        group.flatMap(lane).distinct, mv.colMap, dvOf(group.head),
-        keepDvKey = true,
-        recoverPartitions = mv.partitionSpec.isEmpty)
+      val df = readFiles(spark, path, mv.copy(dv = dvOf(group.head)),
+        group.flatMap(lane).distinct, keepDvKey = true)
       // LEFT join + in-plan guard: a scan key neither stamp spelling
       // matched would otherwise DROP its rows silently — fail loud
       // instead (costs nothing: a codegen'd null check, no extra pass)
@@ -5960,9 +5895,8 @@ object TxLog {
           .join(entriesDf, Seq("_dv_key"), "left_semi")
       val pPos = posOf(fl.prevDv)
       val tPos = posOf(fl.tgtDv)
-      val scan = readFiles(spark, path, vSchema, fl.entries, mv.colMap,
-        Nil, keepDvKey = true,
-        recoverPartitions = mv.partitionSpec.isEmpty)
+      val scan = readFiles(spark, path, mv.copy(dv = Nil), fl.entries,
+        keepDvKey = true)
       def emit(pos: DataFrame, kind: String): DataFrame =
         scan.join(positionHint(pos), Seq("_dv_key", "_dv_idx"), "left_semi")
           .select(alignToTarget(scan, { n =>
@@ -6202,8 +6136,7 @@ object TxLog {
     // old side of a moved key); upsert rows for keys the table lacks
     // simply land as new files. One key-pruned semi-join scan.
     val feedKeys = feed.select(keys.map(col): _*).distinct()
-    val hitUris = readFiles(spark, path, declared, m.files, m.colMap, m.dv,
-        keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+    val hitUris = readFiles(spark, path, m, m.files, keepDvKey = true)
       .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
       .join(feedKeys, keys, "left_semi")
       .select("_gf").distinct().collect().map(_.getString(0))
@@ -6211,7 +6144,7 @@ object TxLog {
     val hitFiles = hitUris.map(resolve).toSet
     if (hitFiles.isEmpty && upserts.limit(1).collect().isEmpty)
       return sealNoopTxn(spark, path, m, txn, "APPLY CHANGES")
-    val hitRows = readFiles(spark, path, declared, hitFiles.toSeq, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    val hitRows = readFiles(spark, path, m, hitFiles.toSeq)
     val merged = graft.operators.Upsert.mergeByKey(
       hitRows.join(deletes, keys, "left_anti"), upserts, keys,
       preValidated = true)
@@ -6322,8 +6255,7 @@ object TxLog {
       return sealNoopTxn(spark, path, m, txn, "APPLY CHANGES (KEYLESS)")
     // match removals to concrete LIVE occurrences, first-N per row in
     // (file, position) order
-    val withPos = readFiles(spark, path, declared, m.files, m.colMap, m.dv,
-      keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+    val withPos = readFiles(spark, path, m, m.files, keepDvKey = true)
     val cond = cols.map(c => withPos(c) <=> col(s"_r_$c")).reduce(_ && _)
     val ow = Window.partitionBy(cols.map(c => col(s"_r_$c")): _*)
       .orderBy(col("_dv_key"), col("_dv_idx"))
@@ -6369,8 +6301,7 @@ object TxLog {
     val cdc = captureCdc(spark, path, m, {
       val dels = cdcDeleteSrc.map { dvName =>
         val sidecar = spark.read.parquet(dvPath(path, dvName))
-        val rows = readFiles(spark, path, declared, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+        val rows = readFiles(spark, path, m, m.files, keepDvKey = true)
         rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
             rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi")
           .select(cols.map(col).toIndexedSeq
@@ -7274,7 +7205,7 @@ object TxLog {
           s"TxLog.buildBloomIndex: scan file '$uri' does not map back " +
             "to any manifest entry — partition value encoding mismatch"))
     }
-    val hashed = readFiles(spark, path, schema, missing, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    val hashed = readFiles(spark, path, m, missing)
       .select(input_file_name().as("_f"),
         xxhash64(col(colName).cast("string")).as("_h"))
     // filter sizing: the manifest's per-commit row counts cover most
@@ -7358,7 +7289,7 @@ object TxLog {
     val m = manifest(spark, path, v)
     val files = prunedFilesByKey(spark, path, colName, value, Some(v))
     import org.apache.spark.sql.functions.{col, lit}
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    readFiles(spark, path, m, files)
       .filter(col(colName) === lit(value))
   }
 }

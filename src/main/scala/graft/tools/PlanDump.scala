@@ -95,6 +95,21 @@ object PlanDump {
         graft.storage.TxLog.deleteWhere(spark, t, col("k") === 1L)
         graft.storage.TxLog.changeFeed(spark, t, 2L, 3L)
       },
+      // TxLog.read plans from the manifest's file list through the same
+      // index the catalog mounts: partition pruning and min/max file
+      // skipping show under PartitionFilters and the selected files
+      "TxLog.read (manifest-backed scan: partition pruning + stats skipping)" -> {
+        import org.apache.spark.sql.functions.col
+        val t = java.nio.file.Files
+          .createTempDirectory("plandump_read").toString + "/t"
+        graft.storage.TxLog.create(spark.range(0, 100)
+          .select(col("id").as("pos"), (col("id") % 2).as("chr")).coalesce(1),
+          t, Some("chr"), statsCols = Seq("pos"))
+        graft.storage.TxLog.append(spark.range(100, 200)
+          .select(col("id").as("pos"), (col("id") % 2).as("chr")).coalesce(1), t)
+        graft.storage.TxLog.read(spark, t)
+          .filter(col("chr") === 1L && col("pos").between(120L, 140L))
+      },
     )
     val body = picks.map { case (name, df) =>
       s"## $name\n\n```\n${df.queryExecution.explainString(

@@ -126,28 +126,28 @@ class QuantilesSpec extends SparkSpec {
     // threshold between narrow's ~7 and wide's ~4000 distinct values
     spark.conf.set(Percentiles.MaxHistogramDistinctConf, "100")
     try {
-      val got = Percentiles.adaptiveExactMulti(df, "g", specs)
-        .orderBy("g").collect().map(_.toString).toSeq
+      val (gotDf, gotPlan) =
+        Percentiles.adaptiveExactMultiWithDispatch(df, "g", specs)
+      val got = gotDf.orderBy("g").collect().map(_.toString).toSeq
       assert(got == expected, s"$got vs $expected")
-      assert(Percentiles.lastDispatch ==
-        Map("wide" -> "refinement", "narrow" -> "histogram"),
-        Percentiles.lastDispatch.toString)
+      assert(gotPlan ==
+        Map("wide" -> "refinement", "narrow" -> "histogram"), gotPlan.toString)
       // threshold above both: everything stays on the histogram
       spark.conf.set(Percentiles.MaxHistogramDistinctConf, "1000000")
-      val all = Percentiles.adaptiveExactMulti(df, "g", specs)
-        .orderBy("g").collect().map(_.toString).toSeq
+      val (allDf, allPlan) =
+        Percentiles.adaptiveExactMultiWithDispatch(df, "g", specs)
+      val all = allDf.orderBy("g").collect().map(_.toString).toSeq
       assert(all == expected, s"$all vs $expected")
-      assert(Percentiles.lastDispatch ==
-        Map("wide" -> "histogram", "narrow" -> "histogram"),
-        Percentiles.lastDispatch.toString)
+      assert(allPlan ==
+        Map("wide" -> "histogram", "narrow" -> "histogram"), allPlan.toString)
       // threshold below both: everything refines
       spark.conf.set(Percentiles.MaxHistogramDistinctConf, "1")
-      val ref = Percentiles.adaptiveExactMulti(df, "g", specs)
-        .orderBy("g").collect().map(_.toString).toSeq
+      val (refDf, refPlan) =
+        Percentiles.adaptiveExactMultiWithDispatch(df, "g", specs)
+      val ref = refDf.orderBy("g").collect().map(_.toString).toSeq
       assert(ref == expected, s"$ref vs $expected")
-      assert(Percentiles.lastDispatch ==
-        Map("wide" -> "refinement", "narrow" -> "refinement"),
-        Percentiles.lastDispatch.toString)
+      assert(refPlan ==
+        Map("wide" -> "refinement", "narrow" -> "refinement"), refPlan.toString)
     } finally spark.conf.unset(Percentiles.MaxHistogramDistinctConf)
   }
 

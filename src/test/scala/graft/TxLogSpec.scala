@@ -762,6 +762,35 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.read(spark, path).count() == 7L)
   }
 
+  test("building a read runs no Spark job: read, readWithPosition, readBetween over a 40-file version") {
+    // above Spark's 32-path parallel-listing threshold: a read planned
+    // from the file list as paths would stat them in a listing JOB
+    val path = freshPath("nojob")
+    TxLog.create(spark.range(0, 400).select(col("id").as("k"),
+      (col("id") % 4).cast("string").as("part"), (col("id") * 0.5).as("v"))
+      .repartition(10, col("k")), path, Some("part"), statsCols = Seq("k"))
+    val m = TxLog.manifest(spark, path, TxLog.currentVersion(spark, path).get)
+    assert(m.files.size == 40, s"fixture wants 40 files, got ${m.files.size}")
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (plain, withPos, between) =
+      try {
+        val built = (TxLog.read(spark, path), TxLog.readWithPosition(spark, path),
+          TxLog.readBetween(spark, path, "k", 100L, 199L))
+        Thread.sleep(500) // let any (unexpected) job-start events drain
+        assert(jobs == 0, s"building the three reads ran $jobs jobs")
+        built
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(plain.count() == 400L)
+    assert(withPos.select("_file", "_pos").distinct().count() == 400L)
+    assert(between.count() == 100L)
+  }
+
   test("fastCount + stats survive %-escaped partition values (URI decode fallback)") {
     // ':' is Hive-escaped to %3A in the partition dir name; the scan's
     // input_file_name re-encodes '%' as %25, so without the decode

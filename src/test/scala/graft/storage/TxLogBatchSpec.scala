@@ -1,6 +1,7 @@
 package graft.storage
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 
@@ -45,6 +46,79 @@ class TxLogBatchSpec extends SparkSpec {
     val atTs = spark.read.format("graft-txlog").option("path", path)
       .option("timestampAsOf", ts.toInstant.toString).load()
     assert(rows(atTs) == rows(d))
+
+    // TxLog.read scans the same manifest-backed index as the format
+    // door: the two agree in rows and in column names and types across
+    // every snapshot shape the index resolves. Only order and
+    // nullability differ: TxLog.read restores the declared order (the
+    // mount lists partition columns last) and reports every column
+    // nullable, as parquet reads do
+    def parity(tag: String, p: String): Unit = {
+      val viaRead = TxLog.read(spark, p)
+      val viaFmt = spark.read.format("graft-txlog").option("path", p).load()
+      def shape(df: org.apache.spark.sql.DataFrame) =
+        df.schema.fields.map(f => f.name -> f.dataType).toMap
+      assert(shape(viaRead) == shape(viaFmt),
+        s"$tag: ${viaRead.schema.simpleString} vs ${viaFmt.schema.simpleString}")
+      assert(viaRead.columns.toSeq == StructType.fromDDL(TxLog.manifest(spark, p,
+        TxLog.currentVersion(spark, p).get).schemaDdl).fieldNames.toSeq, tag)
+      val (a, b) = (viaRead.collect().toSet,
+        viaFmt.select(viaRead.columns.map(col).toIndexedSeq: _*).collect().toSet)
+      assert(a.nonEmpty && a == b, s"$tag: $a vs $b")
+    }
+    parity("merged", path)
+    // shallow clone plus an append: absolute clone refs and relative
+    // entries in one snapshot, partition values parsed from both roots
+    val cl = freshPath("parity_clone")
+    TxLog.clone(spark, path, cl)
+    TxLog.append(Seq((5L, "p3", 5.0)).toDF("k", "part", "v"), cl)
+    parity("shallow clone", cl)
+    assert(TxLog.read(spark, cl).filter(col("part") === "p1").count() == 2)
+    // a string partition value that reads as a number keeps its zero
+    val zp = freshPath("parity_zero")
+    TxLog.create(Seq((1L, "01", 1.0), (2L, "1", 2.0)).toDF("k", "part", "v"),
+      zp, Some("part"))
+    parity("string partition '01'", zp)
+    assert(TxLog.read(spark, zp).filter(col("k") === 1L)
+      .select("part").as[String].collect().toSeq == Seq("01"))
+    // renamed data and partition columns read back under logical names
+    val rn = freshPath("parity_rename")
+    TxLog.create(d, rn, Some("part"))
+    TxLog.renameColumn(spark, rn, "v", "score")
+    TxLog.renameColumn(spark, rn, "part", "grp")
+    parity("renamed columns", rn)
+    assert(TxLog.read(spark, rn).columns.toSeq == Seq("k", "grp", "score"))
+    // bucket(n, c) hidden layout: no partition columns surface
+    val bk = freshPath("parity_bucket")
+    TxLog.create(d, bk, hiddenPartitions = Seq("bucket(4, k)"))
+    parity("bucket(4, k)", bk)
+    // deletion vectors under the broadcast budget (DV-aware format) and
+    // above it (the anti-join relation, which itself calls TxLog.read)
+    val dv = freshPath("parity_dv")
+    TxLog.create(spark.range(0, 40).select(col("id").as("k"),
+      (col("id") % 4).cast("string").as("part"), (col("id") * 1.0).as("v")),
+      dv, Some("part"))
+    TxLog.deleteWhere(spark, dv, col("k") % 10 === 0L, deletionVectors = true)
+    parity("DV below budget", dv)
+    assert(TxLog.read(spark, dv).count() == 36)
+    val prev = spark.conf.getOption("graft.txlog.dvBroadcastMaxRows")
+    spark.conf.set("graft.txlog.dvBroadcastMaxRows", "0")
+    try parity("DV above budget", dv)
+    finally prev match {
+      case Some(x) => spark.conf.set("graft.txlog.dvBroadcastMaxRows", x)
+      case None => spark.conf.unset("graft.txlog.dvBroadcastMaxRows")
+    }
+    // a filter on TxLog.read's result skips files by the manifest stats
+    val st = freshPath("parity_stats")
+    TxLog.create(spark.range(0, 100).select(col("id").as("pos")).coalesce(1),
+      st, statsCols = Seq("pos"))
+    Seq(100L, 200L, 300L).foreach(lo =>
+      TxLog.append(spark.range(lo, lo + 100).select(col("id").as("pos"))
+        .coalesce(1), st))
+    val win = TxLog.read(spark, st).filter(col("pos").between(150L, 249L))
+    assert(win.count() == 100)
+    val planned = scansOf(win).map(_.selectedPartitions.totalNumberOfFiles).sum
+    assert(planned == 2, s"TxLog.read planned $planned of 4 files for a 2-file range")
   }
 
   test("pushdown reaches the scan: partition pruning, data filters, column pruning") {
