@@ -414,16 +414,34 @@ object Dedup {
   /** Connected components over near-dup pairs — the step that turns
     * pairwise candidates into dedup CLUSTERS (keep min-id per
     * component, drop the rest). Returns (doc_id, component) with
-    * component = the smallest doc_id reachable.
+    * component = the smallest doc_id reachable, one row per id that
+    * occurs in `pairs`.
     *
-    * Algorithm: min-label propagation with pointer jumping. Each round
+    * EAGER: this runs Spark jobs when it is called, not when the
+    * returned frame is run, and so does every operator built on it
+    * ([[sweep]], [[electBest]], [[leakageSafeSplit]], [[kfoldSplit]],
+    * [[semanticDedup]]).
+    *
+    * Small pair sets solve on the driver. `bound` is the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (the size it already
+    * trusts to ship whole) over 16 bytes per edge: 655,360 edges at
+    * the 10 MB default. One collect of `pairs.limit(bound + 1)` reads
+    * the pairs (one job over a single partition; Spark's limit widens
+    * its scan job by job, so pairs spread over many partitions can
+    * take a few). If the set fits, union-find labels each id with its
+    * component's smallest id and the result is a local frame.
+    *
+    * Everything else — more pairs than the bound, a threshold ≤ 0, ids
+    * that are not int/long, a null id — runs the distributed loop:
+    * min-label propagation with pointer jumping. Each round
     * (1) every node takes the min label over its neighbors, then
     * (2) every node re-reads the label OF its label (comp -> comp's
     * comp) — the doubling step that collapses chains in O(log diameter)
     * rounds instead of O(diameter). Per round: one shuffle join on the
     * edge list + one self-join on the label table, each keyed by id —
     * the classic large-graph CC shape (no driver-side adjacency, no
-    * assumption the graph fits anywhere).
+    * assumption the graph fits anywhere). Both paths give the same
+    * labels whenever the loop converges within `maxIters`.
     *
     * Lineage control: each round re-reads `labels` in three places, so
     * chaining rounds lazily would grow the logical plan ~4^rounds and
@@ -439,12 +457,66 @@ object Dedup {
     * in 6. */
   def components(pairs: DataFrame, maxIters: Int = 25,
                  checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    // the explicit param wins; otherwise Checkpoints.cut honors the
-    // session-wide graft.checkpointDir conf (reliable at cluster scale)
-    def snap(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else Checkpoints.cut(df)
-    // every snapLazy below is immediately followed by a full-coverage
+    val directed = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+      .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
+    componentsOnDriver(pairs, directed.schema("a"))
+      .getOrElse(componentsLoop(directed, maxIters, checkpointDir))
+  }
+
+  /** [[components]]' driver solve, or None when the pair set is over
+    * the bound or its ids are not int/long or contain a null. `id` is
+    * the loop's id column (the union widens doc_a and doc_b), whose
+    * type and nullability the result keeps. */
+  private def componentsOnDriver(pairs: DataFrame,
+      id: org.apache.spark.sql.types.StructField): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val spark = pairs.sparkSession
+    val maxEdges =
+      math.min(spark.sessionState.conf.autoBroadcastJoinThreshold / 16, Int.MaxValue - 1L)
+    if (maxEdges <= 0 || (id.dataType != IntegerType && id.dataType != LongType))
+      return None
+    val rows = pairs.select("doc_a", "doc_b").limit(maxEdges.toInt + 1).collect()
+    if (rows.length > maxEdges || rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      return None
+    val ends = rows.map(_.getAs[Number](0).longValue) ++ rows.map(_.getAs[Number](1).longValue)
+    val ids = ends.sorted.distinct
+    // union-find over sorted positions: the root is always the smaller
+    // position, so every set's root is its smallest id
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = {
+      var i = x
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    val e = rows.length
+    var k = 0
+    while (k < e) {
+      val ra = find(java.util.Arrays.binarySearch(ids, ends(k)))
+      val rb = find(java.util.Arrays.binarySearch(ids, ends(k + e)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      k += 1
+    }
+    val data = ids.indices.map { i =>
+      val root = ids(find(i))
+      if (id.dataType == LongType) InternalRow(ids(i), root)
+      else InternalRow(ids(i).toInt, root.toInt)
+    }
+    Some(org.apache.spark.sql.graftbridge.ExprBridge.ofRows(spark, LocalRelation(Seq(
+      AttributeReference("doc_id", id.dataType, id.nullable)(),
+      AttributeReference("component", id.dataType, nullable = true)()), data)))
+  }
+
+  /** [[components]]' distributed loop over the directed edge list
+    * (a, b), both directions of every pair. */
+  private def componentsLoop(directed: DataFrame, maxIters: Int,
+                             checkpointDir: Option[String]): DataFrame = {
+    checkpointDir.foreach(directed.sparkSession.sparkContext.setCheckpointDir)
+    // the explicit param wins; otherwise Checkpoints.cutLazy honors the
+    // session-wide graft.checkpointDir conf (reliable at cluster scale).
+    // Every snapLazy below is immediately followed by a full-coverage
     // action (labelSum — an ungrouped aggregate), which materializes
     // the checkpoint in the SAME job (Checkpoints.cutLazy): one Spark
     // job per round instead of two, on a loop whose per-round data is
@@ -461,11 +533,7 @@ object Dedup {
     // only label-sized exchanges remain in the loop
     // lazy cut: the initial-label aggregate (via prevSum) reads every
     // edge partition, materializing this checkpoint in the same job
-    val edges = snapLazy(pairs
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      .distinct()
-      .repartition(col("b")))
+    val edges = snapLazy(directed.distinct().repartition(col("b")))
     // initial label: min(self, direct neighbors) — saves one round
     // (lazy cut: the prevSum aggregate right below materializes it)
     var labels = snapLazy(edges.groupBy("a")
@@ -522,7 +590,11 @@ object Dedup {
     * Scale: inherits each stage's story — banded candidate generation
     * (near-linear), verify only on candidates, iterative CC over the
     * (tiny relative to corpus) verified pair set, and a final anti-join
-    * keyed on id. Nothing here is corpus × corpus. */
+    * keyed on id. Nothing here is corpus × corpus.
+    *
+    * EAGER: [[components]] runs when this is called, so the MinHash and
+    * verify stages run then too; a pair set within components' driver
+    * bound costs one job here, a larger one the distributed loop. */
   def sweep(docs: DataFrame, shingleK: Int = 2, minJaccard: Double = 0.5,
             idCol: String = "doc_id"): DataFrame = {
     val verified = ngramJaccard(docs, shingleK, minJaccard)
@@ -594,12 +666,16 @@ object Dedup {
     * connected component elects its max-quality member (ties to the
     * smaller id — still a total order, still deterministic).
     *
-    * One components() run (pointer jumping, O(log d) rounds) + a
-    * component-partitioned window over cluster-sized groups. Members
-    * MISSING a quality row still stand for election (LEFT join, null
-    * quality ranks last) — an inner join would silently erase them,
-    * and a cluster whose every member lacked quality would vanish
-    * entirely instead of electing its min-id member. */
+    * One components() run + a component-partitioned window over
+    * cluster-sized groups. Members MISSING a quality row still stand
+    * for election (LEFT join, null quality ranks last) — an inner
+    * join would silently erase them, and a cluster whose every member
+    * lacked quality would vanish entirely instead of electing its
+    * min-id member.
+    *
+    * EAGER: [[components]] runs when this is called (one collect job
+    * for a pair set within its driver bound, the distributed loop
+    * otherwise); the election itself runs with the returned frame. */
   def electBest(pairs: DataFrame, quality: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("component")
@@ -790,12 +866,18 @@ object Dedup {
     * fit sample's support only down to one point per center; the fit
     * cap is the real ceiling on cell-count growth, exactly as in
     * [[graft.operators.Ivf.fit]]. Duplicate groups resolve by the
-    * same pointer-jumping [[components]] loop the MinHash sweep uses.
+    * same [[components]] the MinHash sweep uses.
     * Nothing driver-sized except the k centroids.
     *
     * Returns one row PER INPUT VECTOR:
     * (vec_id, cell, component, centroid_cos, keep) — `keep = false`
-    * rows are the semantic duplicates to drop. */
+    * rows are the semantic duplicates to drop.
+    *
+    * EAGER: the corpus count, the KMeans fit and [[components]] over
+    * the within-cell pairs all run when this is called — components
+    * as one collect job while the pairs are within its driver bound,
+    * as the distributed loop otherwise; the keeper election runs with
+    * the returned frame. */
   def semanticDedup(emb: DataFrame, tau: Double = 0.95, nlist: Int = 0,
                     fitSampleRows: Long = 200000L,
                     seed: Long = 42L): DataFrame = {

@@ -132,16 +132,22 @@ object Percentiles {
     * EAGER like [[refinedExactMulti]] (the probe collects group-sized
     * rows at construction); callers composing lazy plans use
     * [[exactMulti]]. */
-  // session-scoped memo of the DISPATCH DECISION (per-column distinct
+  // per-session memo of the DISPATCH DECISION (per-column distinct
   // estimates), keyed by the analyzed plan's semantic hash — the
   // corpusCount-memo pattern: a repeat call over the same corpus whose
   // columns all dispatched to the histogram skips the probe scan
   // entirely. Only the decision caches, never the refinement seeds: a
   // stale hit (data rewritten under an identical plan in one session)
   // can pick the less-optimal plan, but values are computed fresh
-  // either way — plan choice skew, never a wrong number.
-  private val dispatchMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
+  // either way — plan choice skew, never a wrong number. Weak session
+  // keys: a dropped session takes its memo with it.
+  private val dispatchMemos = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]]())
+  private def dispatchMemo(spark: org.apache.spark.sql.SparkSession)
+      : java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]] =
+    dispatchMemos.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]())
 
   def adaptiveExactMulti(df: DataFrame, groupCol: String,
                          specs: Seq[(String, String, Double)]): DataFrame =
@@ -163,7 +169,8 @@ object Percentiles {
       df.queryExecution.analyzed.semanticHash().toString).getOrElse(
         java.util.UUID.randomUUID().toString) +
       "|" + groupCol + "|" + vcols.mkString(",") + "|" + maxDistinct
-    val memoHit = Option(dispatchMemo.get(memoKey))
+    val memo = dispatchMemo(spark)
+    val memoHit = Option(memo.get(memoKey))
     memoHit.filter(_.valuesIterator.forall(_ <= maxDistinct)) match {
       case Some(_) =>
         // every column stays on the histogram: no seeds needed, the
@@ -190,8 +197,8 @@ object Percentiles {
       vcols.zipWithIndex.map { case (vc, i) =>
         vc -> probe.iterator.map(_.getLong(1 + i * 4 + 3)).sum
       }.toMap
-    dispatchMemo.put(memoKey, distinctByCol)
-    if (dispatchMemo.size > 256) dispatchMemo.clear() // bounded, advisory
+    memo.put(memoKey, distinctByCol)
+    if (memo.size > 256) memo.clear() // bounded, advisory
     val (refCols, histCols) =
       vcols.partition(vc => distinctByCol(vc) > maxDistinct)
     val histFrame = if (histCols.isEmpty) None else Some(

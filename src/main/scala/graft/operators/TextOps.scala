@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.rolling_hash
+import graft.functions.NgramHashes
 
 /** Text-analysis operators: language id, quality scoring, token
   * counting, fingerprinting. Everything is `functions._` string/regex
@@ -154,17 +155,11 @@ object TextOps {
       .orderBy("doc_id")
 
   /** (id…, gram-hash) pairs for every word n-gram of `textCol`: md5
-    * over the space-joined n-word window, one output row per window.
-    * The token array lands in its OWN projection before the
-    * higher-order transform so the split runs once per row, not once
-    * per window (HOF lambdas re-evaluate non-trivial outer expressions
-    * per element — the same CollapseProject reasoning as
-    * Similarity.quantizeInt8). Docs shorter than n words emit no
-    * grams (`sequence(1, m<1)` would count DOWNWARD and fabricate
-    * windows — same guard as Joins.rangeJoin). */
+    * over the space-joined n-word window, one output row per window
+    * ([[explodeNgramHashesAt]] without its position columns). */
   private def explodeNgramHashes(df: DataFrame, n: Int, textCol: String,
                                  keep: Seq[Column]): DataFrame =
-    explodeNgramHashesAt(df, n, textCol, keep).drop("start")
+    explodeNgramHashesAt(df, n, textCol, keep).drop("start", "first")
 
   /** n-gram-level benchmark decontamination — the GPT-3-style 13-gram
     * scrub: a document is contaminated if ANY of its word n-grams
@@ -315,34 +310,41 @@ object TextOps {
     * least `minDocs` DISTINCT documents — headers, footers, license
     * blurbs, navigation chrome. (Distinct from [[decontaminateNgrams]],
     * which hunts a KNOWN benchmark's grams; this finds unknown repeated
-    * spans from the corpus itself.) Shape: the same linear gram explode
-    * ([[explodeNgramHashes]]), per-doc distinct so in-doc repetition
-    * can't fake corpus-wide spread, then a partial-agg doc count per
-    * gram — hashes and counts on the wire, never text. Output:
-    * (gram hash, n_docs) for spans over the threshold; feed it back as
-    * a removal list or QC signal. */
+    * spans from the corpus itself.) Output: (gram hash, n_docs) for
+    * spans over the threshold; feed it back as a removal list or QC
+    * signal.
+    *
+    * Scale shape: one linear gram explode ([[explodeNgramHashesAt]])
+    * keeps only each document's FIRST window of a gram, so in-doc
+    * repetition can't fake corpus-wide spread, then a partial-agg row
+    * count per gram — hashes and counts on the wire, never text, and
+    * no (doc, gram) distinct shuffle. `doc_id` is a key: two input
+    * rows sharing an id count as two documents. */
   def commonSpans(docs: DataFrame, n: Int = 5, minDocs: Int = 3): DataFrame = {
     require(n >= 1 && minDocs >= 2, s"bad commonSpans params n=$n minDocs=$minDocs")
-    explodeNgramHashes(docs, n, "text", Seq(col("doc_id")))
-      .select("doc_id", "g").distinct()
+    explodeNgramHashesAt(docs, n, "text", Nil)
+      .filter(col("first"))
       .groupBy("g")
       .agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
       .orderBy(desc("n_docs"), col("g"))
   }
 
-  /** Positioned variant of [[explodeNgramHashes]]: one (id…, start, g)
-    * row per word n-gram window, `start` 0-based — the join-back key
-    * that lets a matched gram hash resolve to the SPAN it covers. */
+  /** One (id…, start, g, first) row per word n-gram window of
+    * `textCol`: `g` is the md5 of the space-joined n-word window,
+    * `start` its 0-based token position (the join-back key that lets a
+    * matched gram hash resolve to the SPAN it covers), and `first` is
+    * true on the row's first window carrying `g`. One
+    * [[graft.functions.NgramHashes]] eval per row hashes every window
+    * straight off the text's bytes; docs shorter than n words (and
+    * null texts) emit no grams. */
   private def explodeNgramHashesAt(df: DataFrame, n: Int, textCol: String,
                                    keep: Seq[Column]): DataFrame =
-    df.withColumn("_toks", split(col(textCol), " "))
-      .select((keep :+ posexplode(
-        when(size(col("_toks")) >= n,
-          transform(sequence(lit(1), size(col("_toks")) - (n - 1)),
-            i => md5(concat_ws(" ", slice(col("_toks"), i, lit(n))))))
-          .otherwise(array().cast("array<string>")))
-        .as(Seq("start", "g"))): _*)
+    df.select((keep :+ posexplode(NgramHashes.hashes(col(textCol), n))
+        .as(Seq("start", "_h"))): _*)
+      .withColumn("g", col("_h.g"))
+      .withColumn("first", col("_h.first"))
+      .drop("_h")
 
   /** Boilerplate REMOVAL — the consumer of [[commonSpans]]: strip every
     * word covered by an n-gram span shared by ≥ `minDocs` documents,
@@ -356,10 +358,15 @@ object TextOps {
     * input doc — untouched docs pass through with frac 0, fully-
     * boilerplate docs come back empty with frac 1.
     *
-    * Scale shape: two linear gram explodes (hashes on the wire), one
-    * equi-join against the (small) offending-gram set, one per-doc
-    * aggregate of matched starts, one id-keyed join back — never
-    * corpus × corpus, and the reconstruction is per-row array math. */
+    * Scale shape: two linear gram explodes (hashes on the wire, one
+    * kernel eval per row): [[commonSpans]]' first-occurrence count per
+    * gram, then the positioned explode's equi-join on `g` against the
+    * (small) offending-gram set — AQE broadcasts that set while it is
+    * small and can split a hot gram's partition when it is not — one
+    * per-doc aggregate of matched starts, one id-keyed join back.
+    * Never corpus × corpus, and the reconstruction is per-row array
+    * math. `doc_id` must be a key: under a repeated id, the join back
+    * would apply both rows' matched starts to each. */
   def stripBoilerplate(docs: DataFrame, n: Int = 5, minDocs: Int = 3): DataFrame = {
     val spans = commonSpans(docs, n, minDocs).select("g")
     val starts = explodeNgramHashesAt(docs, n, "text", Seq(col("doc_id")))
@@ -456,7 +463,7 @@ object TextOps {
       .groupBy("w1").agg(count(lit(1)).as("c1"))
     val vocabN = uni.agg(count(lit(1)).as("v"))
     // size>=2 guard: sequence(1, 0) would count DOWNWARD and fabricate
-    // windows — same guard as explodeNgramHashesAt
+    // windows — same guard as Joins.rangeJoin
     val bi = toks.select(col("doc_id"),
         explode(when(size(col("_toks")) >= 2,
           transform(sequence(lit(1), size(col("_toks")) - 1),

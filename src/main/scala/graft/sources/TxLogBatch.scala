@@ -41,11 +41,19 @@ import graft.storage.TxLog
   * `m.version`: that version's columnar checkpoint may then serve
   * planning above the distributed threshold. A file subset plans on
   * the driver — a checkpoint enumerates the whole version.
+  *
+  * `viewColMap` is the table's logical → physical map when `m` is a
+  * reader's view spelled in PHYSICAL names ([[TxLog.read]]'s view,
+  * whose own `colMap` is empty); ANALYZE statistics, keyed by logical
+  * names, translate through it onto this schema. A mount spelled in
+  * logical names passes Nil.
   */
 class TxLogFileIndex(spark: SparkSession,
                      private[graft] val tablePath: String,
                      private[graft] val m: TxLog.Manifest,
-                     wholeVersion: Boolean) extends FileIndex {
+                     wholeVersion: Boolean,
+                     private[graft] val viewColMap: Seq[(String, String)] = Nil)
+    extends FileIndex {
   import TxLogFileIndex.{admitsNull, admitsTagged, dirPartOfEntry, partitionValuesOf}
 
   private val declared = StructType.fromDDL(m.schemaDdl)
@@ -638,9 +646,10 @@ object TxLogBatch {
                wholeVersion: Boolean,
                fileFormat: org.apache.spark.sql.execution.datasources.FileFormat,
                bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = None,
-               options: Map[String, String] = Map.empty)
+               options: Map[String, String] = Map.empty,
+               viewColMap: Seq[(String, String)] = Nil)
       : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
-    val index = new TxLogFileIndex(spark, path, m, wholeVersion)
+    val index = new TxLogFileIndex(spark, path, m, wholeVersion, viewColMap)
     val partCols = index.partitionSchema.fieldNames.toSet
     org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
       partitionSchema = index.partitionSchema,

@@ -2200,7 +2200,8 @@ object TxLog {
     val scan = spark.baseRelationToDataFrame(graft.sources.TxLogBatch.relation(
       spark, path, view,
       wholeVersion = fileSet.size == m.files.size && m.files.forall(fileSet),
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat))
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      viewColMap = m.colMap))
     val scanned =
       if (dvRelevant.isEmpty && !keepDvKey) scan
       else scan

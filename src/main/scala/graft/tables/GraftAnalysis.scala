@@ -160,7 +160,8 @@ case class GraftAnalysis(spark: SparkSession) extends Rule[LogicalPlan] {
   private def statsCatalogTable(path: String, v: Long, m: TxLog.Manifest,
                                 name: String,
                                 schema: org.apache.spark.sql.types.StructType,
-                                sizeInBytes: BigInt)
+                                sizeInBytes: BigInt,
+                                viewColMap: Seq[(String, String)] = Nil)
       : Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] = {
     import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
     import org.apache.spark.sql.catalyst.catalog.CatalogColumnStat
@@ -174,12 +175,18 @@ case class GraftAnalysis(spark: SparkSession) extends Rule[LogicalPlan] {
       val ndv = graft.storage.Analyze.read(spark, path)
         .filter(_.analyzedVersion <= v) // never serve future stats to time travel
       if (rowCount.isEmpty && ndv.isEmpty) return None
+      // NDVs are keyed by logical names; null counts, like every
+      // per-file stat, by physical ones. A physical-name view
+      // (viewColMap nonEmpty) keys its column stats physically too.
+      def physOf(c: String): String =
+        (m.colMap ++ viewColMap).find(_._1 == c).map(_._2).getOrElse(c)
       val nulls: Map[String, Long] = m.fileNulls.values
         .flatten.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).sum }
       val colStats: Map[String, CatalogColumnStat] = ndv.map(_.cols.map {
-        case (c, s) => c -> CatalogColumnStat(
-          distinctCount = Some(BigInt(s.ndv)),
-          nullCount = nulls.get(c).map(BigInt(_)))
+        case (c, s) =>
+          (if (viewColMap.isEmpty) c else physOf(c)) -> CatalogColumnStat(
+            distinctCount = Some(BigInt(s.ndv)),
+            nullCount = nulls.get(physOf(c)).map(BigInt(_)))
       }).getOrElse(Map.empty)
       Some(CatalogTable(
         identifier = org.apache.spark.sql.catalyst.TableIdentifier(name),
@@ -209,7 +216,7 @@ case class GraftAnalysis(spark: SparkSession) extends Rule[LogicalPlan] {
           case idx: graft.sources.TxLogFileIndex =>
             statsCatalogTable(idx.tablePath, idx.m.version, idx.m,
               new org.apache.hadoop.fs.Path(idx.tablePath).getName,
-              lr.relation.schema, BigInt(fsRel.sizeInBytes))
+              lr.relation.schema, BigInt(fsRel.sizeInBytes), idx.viewColMap)
           case _ => None
         }
       case jr: graft.sources.TxLogJoinRelation =>

@@ -29,7 +29,7 @@ object PlanDump {
         WarehouseQueries.bloomJoinQuery(spark, d),
       "text_repetition (bigram explode + two partial-agg phases)" ->
         PipelineQueries.entries("text_repetition")(spark, d),
-      "text_boilerplate (positioned gram explode + per-row span filter)" ->
+      "text_boilerplate (first-occurrence gram count, equi-join on g, per-row span filter)" ->
         PipelineQueries.entries("text_boilerplate")(spark, d),
       "text_lm_score (count-table equi-joins + exact decimal log sum)" ->
         PipelineQueries.entries("text_lm_score")(spark, d),

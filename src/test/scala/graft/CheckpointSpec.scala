@@ -82,8 +82,14 @@ class CheckpointSpec extends SparkSpec {
       .toDF("doc_a", "doc_b")
     def run() = Dedup.components(pairs)
       .orderBy("doc_id").collect().map(_.toString).toSeq
-    val local = run()
-    val reliable = withReliable(run())
+    // threshold -1 forces the distributed loop (the cutting path): a
+    // 3-edge set is well inside the driver-solve bound
+    val prevBc = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (local, reliable) =
+      try (run(), withReliable(run()))
+      finally prevBc.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
     assert(local == reliable, s"$local vs $reliable")
   }
 

@@ -249,8 +249,14 @@ class PipelineQueriesSpec extends SparkSpec {
     val pairs = spark.range(99)
       .filter(pmod(col("id"), lit(25L)) =!= lit(24L))
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val got = Dedup.components(pairs, checkpointDir = Some(dir)).collect()
+    // threshold -1 forces the distributed loop: a 98-edge set is well
+    // inside the driver-solve bound, which never checkpoints
+    val prevBc = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val got = try Dedup.components(pairs, checkpointDir = Some(dir)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally prevBc.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
     val expected = (0L until 100L).map(i => i -> (i - i % 25)).toMap
     assert(got == expected)
   }

@@ -38,6 +38,30 @@ class PlanAuditSpec extends SparkSpec {
       s"no partial aggregation on gram ownership:\n${p.take(4000)}")
   }
 
+  test("text_boilerplate: gram doc counts from first-occurrence rows (no (doc_id, g) distinct), equi-join on g") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val df = PipelineQueries.entries("text_boilerplate")(spark, sf)
+    val opt = df.queryExecution.optimizedPlan
+    // a distinct is an Aggregate with no aggregate function: the old
+    // plan de-duplicated every (doc_id, g) row before counting
+    val distincts = opt.collect {
+      case a: Aggregate if a.aggregateExpressions.forall(
+          _.find(_.isInstanceOf[AggregateExpression]).isEmpty) =>
+        a.groupingExpressions.flatMap(_.references.map(_.name)).toSet
+    }
+    assert(!distincts.contains(Set("doc_id", "g")),
+      s"(doc_id, g) distinct is back:\n$opt")
+    // the span starts still resolve through an equi-join on the gram
+    // hash (AQE may broadcast the span set or split a hot gram)
+    val gJoins = opt.collect {
+      case j: Join if j.condition.exists(_.references.map(_.name).toSet == Set("g")) => j
+    }
+    assert(gJoins.nonEmpty, s"no join on g:\n$opt")
+    assert("(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \\[g#".r
+      .findFirstIn(plan(df)).isDefined, s"the join on g is not an equi-join:\n${plan(df)}")
+  }
+
   test("projection pruning: q1_agg reads only the 7 columns it needs") {
     val scans = WarehouseQueries.q1Agg(spark, sf).queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f.requiredSchema.fieldNames.toSet

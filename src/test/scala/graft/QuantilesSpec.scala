@@ -109,6 +109,34 @@ class QuantilesSpec extends SparkSpec {
       s"refined $v vs builtin $expected")
   }
 
+  test("adaptive dispatch memo is per session: a second session probes for itself") {
+    // the probe (one collect at construction) is skipped only on a
+    // memo hit; a memo shared across sessions would skip it in a
+    // session that never probed this plan
+    val rows = (1 to 300).map(i => (s"m${i % 3}", (i % 11) * 1.25))
+    val specs = Seq(("med", "v", 0.5))
+    def probeJobs(s: org.apache.spark.sql.SparkSession): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Percentiles.adaptiveExactMultiWithDispatch(
+          s.createDataFrame(rows).toDF("g", "v"), "g", specs)
+        Thread.sleep(300) // let the job-start events drain
+        jobs.get
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val other = spark.newSession()
+    assert(probeJobs(spark) > 0, "first call must probe")
+    assert(probeJobs(spark) == 0, "a repeat call in the session must hit its memo")
+    assert(probeJobs(other) > 0, "another session must not see the first one's memo")
+    assert(probeJobs(other) == 0, "the second session keeps its own memo")
+  }
+
   test("adaptive dispatch: near-unique columns refine, bounded-domain columns stay on the histogram") {
     // r17 verdict #2: q_percentile hardcoded the histogram plan — on a
     // near-unique column at scale that is corpus-linear wire. The

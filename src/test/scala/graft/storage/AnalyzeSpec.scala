@@ -146,6 +146,38 @@ class AnalyzeSpec extends SparkSpec {
       t6.get.cols.toString)
   }
 
+  test("renamed columns: a TxLog.read scan carries each NDV on its own column") {
+    // TxLog.read scans in PHYSICAL names; NDVs are keyed by logical
+    // ones. After x -> z and y -> x, logical x is physical y, and its
+    // NDV must not land on physical x (which holds logical z).
+    val path = fresh("rename")
+    TxLog.create(spark.range(0, 1000).select(col("id").as("x"),
+      (col("id") % 5).as("y")), path)
+    TxLog.renameColumn(spark, path, "x", "z")
+    TxLog.renameColumn(spark, path, "y", "x")
+    val t = Analyze.analyze(spark, path)
+    assert(t.cols("x").ndv == 5L, t.cols.toString)
+    spark.conf.set("spark.sql.cbo.enabled", "true")
+    try {
+      val plan = TxLog.read(spark, path).queryExecution.optimizedPlan
+      val scan = plan.collect {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr
+      }
+      assert(scan.size == 1, plan.toString)
+      val ndv = scan.head.stats.attributeStats.map { case (a, s) =>
+        a.name -> s.distinctCount.map(_.toLong) }
+      assert(ndv.get("y").flatten.contains(5L), s"physical y holds logical x: $ndv")
+      assert(ndv.get("x").flatten.exists(n => math.abs(n - 1000L) <= 50L),
+        s"physical x holds logical z: $ndv")
+      // and through the read's renaming projection, by logical name
+      val top = plan.stats.attributeStats.map { case (a, s) =>
+        a.name -> s.distinctCount.map(_.toLong) }
+      assert(top.get("x").flatten.contains(5L), s"logical x: $top")
+      assert(top.get("z").flatten.exists(n => math.abs(n - 1000L) <= 50L),
+        s"logical z: $top")
+    } finally spark.conf.unset("spark.sql.cbo.enabled")
+  }
+
   test("CBO reorder flips through the PATH door too (format mounts carry the stats)") {
     // r17 verdict #4: format("graft-txlog").load(path) planned with
     // sizeInBytes alone — a path-addressed join got no NDV reorder
