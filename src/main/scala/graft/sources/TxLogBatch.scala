@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.types.{NumericType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.storage.TxLog
 
@@ -26,12 +26,13 @@ import graft.storage.TxLog
   *    against each manifest partition directory's typed values —
   *    driver-side, partition-count bounded;
   *  - DATA skipping evaluates the scan's data filters against the
-  *    manifest's per-file min/max stats ([[TxLog.prunedFiles]]'s rule
-  *    lifted into the planner): a `WHERE k = 5` over a k-clustered
-  *    table plans a few files before a single task launches. Files
-  *    without stats are conservatively kept — pruning is an
-  *    optimization, never a filter (the exact predicate still runs on
-  *    the scan).
+  *    manifest's per-file min/max stats through the ONE shared vote
+  *    ([[TxLog.statsBound]], [[TxLog.statsCompare]],
+  *    [[TxLog.statsAdmits]] — the same rule [[TxLog.prunedFiles]]
+  *    runs): a `WHERE k = 5` over a k-clustered table plans a few
+  *    files before a single task launches. Files without stats are
+  *    conservatively kept — pruning is an optimization, never a
+  *    filter (the exact predicate still runs on the scan).
   *
   * [[TxLog.read]] and every TxLog verb that reads a snapshot scan
   * through the same index ([[TxLogBatch.relation]]): building such a
@@ -54,7 +55,7 @@ class TxLogFileIndex(spark: SparkSession,
                      wholeVersion: Boolean,
                      private[graft] val viewColMap: Seq[(String, String)] = Nil)
     extends FileIndex {
-  import TxLogFileIndex.{admitsNull, admitsTagged, dirPartOfEntry, partitionValuesOf}
+  import TxLogFileIndex.{admitsNull, dirPartOfEntry, partitionValuesOf}
 
   private val declared = StructType.fromDDL(m.schemaDdl)
   private val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
@@ -149,85 +150,53 @@ class TxLogFileIndex(spark: SparkSession,
         dirs.filter { case (_, values, _) => pred.eval(values) }
     }
 
-  /** Min/max skip vote for ONE simple comparison on a stats-tracked
-    * column; None = not skippable by this filter. Bounds are the
-    * manifest's string encoding — numeric columns compare as exact
-    * decimals, everything else lexicographically (the stats contract).
-    */
-  private def rangeOf(e: Expression): Option[(String, Option[String], Option[String])] = {
-    // Encode the literal EXACTLY like collectStats encodes the file
-    // bounds: TIMESTAMP literals as `us:<epoch micros>` (the stats-v2
-    // timezone-free encoding — a Catalyst timestamp literal's value IS
-    // micros, so no zone ever enters the comparison), everything else
-    // Cast-to-string in the session timezone — so a DATE literal
-    // compares as '2021-01-02', never as its raw Catalyst days value
-    // (which would lexicographically mis-prune and silently lose rows).
-    def lit(l: Literal): Option[String] =
-      Option(l.value).flatMap { v =>
-        if (l.dataType == org.apache.spark.sql.types.TimestampType)
-          Some(TxLog.TsStatsPrefix + v.toString)
-        else Option(Cast(l, org.apache.spark.sql.types.StringType,
-          Some(sessionTz)).eval(null)).map(_.toString)
-      }
-    e match {
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case EqualNullSafe(a: AttributeReference, l: Literal) if l.value != null =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case GreaterThan(a: AttributeReference, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThan(a: AttributeReference, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThan(l: Literal, a: AttributeReference) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThan(l: Literal, a: AttributeReference) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case _ => None
-    }
+  /** ONE simple comparison against a literal as (column, lo, hi) —
+    * the planner's only step of its own: the stats vote encodes the
+    * bounds through [[TxLog.statsBound]], and hidden-transform pruning
+    * takes the typed CATALYST values (micros, days, the hash input).
+    * Null literals never vote. */
+  private def rangeOf(e: Expression)
+      : Option[(String, Option[Literal], Option[Literal])] = e match {
+    case EqualTo(a: AttributeReference, l: Literal) if l.value != null =>
+      Some((a.name, Some(l), Some(l)))
+    case EqualTo(l: Literal, a: AttributeReference) if l.value != null =>
+      Some((a.name, Some(l), Some(l)))
+    case EqualNullSafe(a: AttributeReference, l: Literal) if l.value != null =>
+      Some((a.name, Some(l), Some(l)))
+    case GreaterThan(a: AttributeReference, l: Literal) if l.value != null =>
+      Some((a.name, Some(l), None))
+    case GreaterThanOrEqual(a: AttributeReference, l: Literal) if l.value != null =>
+      Some((a.name, Some(l), None))
+    case LessThan(a: AttributeReference, l: Literal) if l.value != null =>
+      Some((a.name, None, Some(l)))
+    case LessThanOrEqual(a: AttributeReference, l: Literal) if l.value != null =>
+      Some((a.name, None, Some(l)))
+    case GreaterThan(l: Literal, a: AttributeReference) if l.value != null =>
+      Some((a.name, None, Some(l)))
+    case GreaterThanOrEqual(l: Literal, a: AttributeReference) if l.value != null =>
+      Some((a.name, None, Some(l)))
+    case LessThan(l: Literal, a: AttributeReference) if l.value != null =>
+      Some((a.name, Some(l), None))
+    case LessThanOrEqual(l: Literal, a: AttributeReference) if l.value != null =>
+      Some((a.name, Some(l), None))
+    case _ => None
   }
 
-  /** Only types whose stats encoding is ORDER-PRESERVING may vote:
-    * numeric and timestamp (compared as decimals — timestamps ride the
-    * stats-v2 `us:`-micros encoding, timezone-free), string (identity)
-    * and date ('yyyy-MM-dd' — zero-padded, so lexicographic IS
-    * chronological and no zone enters a date's rendering). Everything
-    * else (binary, boolean, intervals) is conservatively unprunable. */
-  private def votableType(colName: String): Boolean =
-    declared(colName).dataType match {
-      case _: NumericType => true
-      case org.apache.spark.sql.types.StringType => true
-      case org.apache.spark.sql.types.DateType => true
-      case org.apache.spark.sql.types.TimestampType => true
-      case _ => false
-    }
-
   /** Skip votes resolved to their serializable form: (PHYSICAL stats
-    * key, comparison tag, lo, hi) — everything an executor needs to
-    * run [[TxLogFileIndex.admitsTagged]], the SAME function the driver
-    * walk runs (prune parity by construction). */
+    * key, comparison, lo, hi) — everything an executor needs to run
+    * [[TxLog.statsAdmits]], the SAME vote the driver walk and
+    * [[TxLog.prunedFiles]] run. Types without an order-preserving
+    * encoding never vote. */
   private def voteSpecs(dataFilters: Seq[Expression])
-      : Seq[(String, Int, Option[String], Option[String])] =
-    dataFilters.flatMap(rangeOf)
-      .filter { case (c, _, _) =>
-        m.statsCols.contains(physName(c)) && votableType(c) }
-      .map { case (c, lo, hi) =>
-        val tag = declared(c).dataType match {
-          case _: NumericType => 0
-          case org.apache.spark.sql.types.TimestampType => 1
-          case _ => 2
-        }
-        (physName(c), tag, lo, hi)
+      : Seq[(String, TxLog.StatsCompare, Option[String], Option[String])] =
+    dataFilters.flatMap(rangeOf).flatMap { case (c, lo, hi) =>
+      if (!m.statsCols.contains(physName(c))) None
+      else {
+        val dt = declared(c).dataType
+        def enc(l: Option[Literal]) = l.flatMap(TxLog.statsBound(dt, sessionTz, _))
+        TxLog.statsCompare(dt).map(cmp => (physName(c), cmp, enc(lo), enc(hi)))
       }
+    }
 
   /** (PHYSICAL stats key, wantNull) votes from IsNull/IsNotNull on
     * tracked columns. Spark pushes IsNotNull next to every comparison,
@@ -251,53 +220,22 @@ class TxLogFileIndex(spark: SparkSession,
     val nv = nullVoteSpecs(dataFilters)
     if (votes.isEmpty && nv.isEmpty) files
     else files.filter { case (entry, _) =>
-      votes.forall { case (k, tag, lo, hi) =>
-        admitsTagged(m.fileStats.get(entry).flatMap(_.get(k)), tag, lo, hi) } &&
+      votes.forall { case (k, cmp, lo, hi) =>
+        TxLog.statsAdmits(m.fileStats.get(entry).flatMap(_.get(k)), cmp, lo, hi) } &&
       nv.forall { case (k, want) =>
         admitsNull(m.fileNulls.get(entry).flatMap(_.get(k)),
           m.fileRows.get(entry), want) }
     }
   }
 
-  /** Raw-literal variant of [[rangeOf]] for hidden-transform pruning:
-    * (column, lo, hi) as CATALYST literal values — the transform needs
-    * the typed value (micros, days, the hash input), not the stats
-    * string encoding. Null literals never vote. */
-  private def rawRangeOf(e: Expression)
-      : Option[(String, Option[Any], Option[Any])] = e match {
-    case EqualTo(a: AttributeReference, l: Literal) if l.value != null =>
-      Some((a.name, Some(l.value), Some(l.value)))
-    case EqualTo(l: Literal, a: AttributeReference) if l.value != null =>
-      Some((a.name, Some(l.value), Some(l.value)))
-    case EqualNullSafe(a: AttributeReference, l: Literal) if l.value != null =>
-      Some((a.name, Some(l.value), Some(l.value)))
-    case GreaterThan(a: AttributeReference, l: Literal) if l.value != null =>
-      Some((a.name, Some(l.value), None))
-    case GreaterThanOrEqual(a: AttributeReference, l: Literal) if l.value != null =>
-      Some((a.name, Some(l.value), None))
-    case LessThan(a: AttributeReference, l: Literal) if l.value != null =>
-      Some((a.name, None, Some(l.value)))
-    case LessThanOrEqual(a: AttributeReference, l: Literal) if l.value != null =>
-      Some((a.name, None, Some(l.value)))
-    case GreaterThan(l: Literal, a: AttributeReference) if l.value != null =>
-      Some((a.name, None, Some(l.value)))
-    case GreaterThanOrEqual(l: Literal, a: AttributeReference) if l.value != null =>
-      Some((a.name, None, Some(l.value)))
-    case LessThan(l: Literal, a: AttributeReference) if l.value != null =>
-      Some((a.name, Some(l.value), None))
-    case LessThanOrEqual(l: Literal, a: AttributeReference) if l.value != null =>
-      Some((a.name, Some(l.value), None))
-    case _ => None
-  }
-
   /** Data filters on a transform's SOURCE column → dir-value votes. */
   private def hiddenVotesOf(dataFilters: Seq[Expression])
       : Seq[graft.storage.PartitionTransforms.HiddenVote] =
     if (hiddenSpec.isEmpty) Nil
-    else dataFilters.flatMap(rawRangeOf).flatMap { case (c, lo, hi) =>
+    else dataFilters.flatMap(rangeOf).flatMap { case (c, lo, hi) =>
       if (!declared.fieldNames.contains(c)) Nil
       else hiddenSpec.filter(_.src == c)
-        .flatMap(_.voteFor(declared(c).dataType, lo, hi))
+        .flatMap(_.voteFor(declared(c).dataType, lo.map(_.value), hi.map(_.value)))
     }
 
   override def listFiles(partitionFilters: Seq[Expression],
@@ -353,8 +291,8 @@ class TxLogFileIndex(spark: SparkSession,
                 else Some(r.getAs[scala.collection.Map[
                     String, scala.collection.Seq[String]]](2)
                   .map { case (c, a) => c -> ((a(0), a(1))) }.toMap)
-              votes.forall { case (k, tag, lo, hi) =>
-                admitsTagged(stats.flatMap(_.get(k)), tag, lo, hi) }
+              votes.forall { case (k, cmp, lo, hi) =>
+                TxLog.statsAdmits(stats.flatMap(_.get(k)), cmp, lo, hi) }
             }) &&
             (nv.isEmpty || {
               val nulls =
@@ -433,34 +371,6 @@ object TxLogFileIndex {
         field.dataType, Some(tz)).eval(null)
     })
   }
-
-  /** The min/max skip vote over ONE file's stats entry — shared
-    * VERBATIM by the driver walk and the distributed checkpoint prune,
-    * so the two paths cannot diverge. Tags: 0 numeric (exact decimal
-    * compare; NaN/Infinity bounds fail OPEN), 1 timestamp (stats-v2
-    * `us:`-micros; a legacy session-tz-string entry never votes), 2
-    * lexicographic (string identity / zero-padded ISO dates). A
-    * stats-less entry is conservatively kept — pruning is an
-    * optimization, never a filter. */
-  private[sources] def admitsTagged(stat: Option[(String, String)], tag: Int,
-                                    lo: Option[String],
-                                    hi: Option[String]): Boolean =
-    stat match {
-      case None => true
-      case Some((mn, mx)) => tag match {
-        case 0 =>
-          def geq(a: String, b: String) =
-            scala.util.Try(BigDecimal(a) >= BigDecimal(b)).getOrElse(true)
-          lo.forall(l => geq(mx, l)) && hi.forall(h => geq(h, mn))
-        case 1 =>
-          def geq(a: String, b: String) =
-            (for { x <- TxLog.tsStatsDecode(a); y <- TxLog.tsStatsDecode(b) }
-              yield x >= y).getOrElse(true)
-          lo.forall(l => geq(mx, l)) && hi.forall(h => geq(h, mn))
-        case _ =>
-          lo.forall(l => mx >= l) && hi.forall(h => h >= mn)
-      }
-    }
 
   /** Null-count skip vote. `wantNull` (an IS NULL filter) prunes files
     * whose tracked null count is ZERO; `!wantNull` (IS NOT NULL —

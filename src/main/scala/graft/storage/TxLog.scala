@@ -1113,8 +1113,10 @@ object TxLog {
     * their data-root-relative suffix — raw form first,
     * URL-decoded fallback (input_file_name returns the ENCODED URI
     * while entries are raw filesystem names), loud failure on a
-    * suffix no entry owns. Shared by the file-granular rewrite
-    * discovery, stats collection, and the Bloom index builder. */
+    * suffix no entry owns. The one resolution every scan key goes
+    * through: hit-file discovery ([[discoverHitFiles]]), the DV
+    * sidecar writer ([[writeDv]]), stats collection and the Bloom
+    * index builder. */
   private def entryResolver(entries: Seq[String]): String => String = {
     val bySuffix = entries.map(f => relEntry(f) -> f).toMap
     uri => {
@@ -1674,23 +1676,10 @@ object TxLog {
     // entries are raw filesystem names: a %-escaped partition value
     // would otherwise key stats/rows under a name no manifest entry
     // matches, silently disabling fastCount and skip pruning for the
-    // file — same fallback as buildBloomIndex.entryOf (review finding)
-    val entrySet = files.toSet
+    // file — entryResolver's decode fallback
+    val resolve = entryResolver(files)
     val pairs = rows.map { r =>
-      val uri = r.getString(0)
-      // LAST '/data/': a table rooted under a path that itself
-      // contains '/data/' must not key its stats off the outer
-      // segment (same convention as relEntry/readFiles)
-      val suffix = uri.substring(uri.lastIndexOf("/data/") + "/data/".length)
-      val rel =
-        if (entrySet.contains(suffix)) suffix
-        else {
-          val dec = java.net.URLDecoder.decode(suffix, "UTF-8")
-          if (entrySet.contains(dec)) dec
-          else throw new IllegalStateException(
-            s"TxLog.collectStats: scan file '$uri' does not map back to " +
-              "any staged entry — partition value encoding mismatch")
-        }
+      val rel = resolve(r.getString(0))
       val st = statsCols.flatMap { c =>
         val mn = r.getAs[String](s"_min_$c")
         val mx = r.getAs[String](s"_max_$c")
@@ -2233,12 +2222,53 @@ object TxLog {
   private[graft] def dvPath(path: String, f: String): String =
     if (isAbsEntry(f)) f else new Path(new Path(path, "_dv"), f).toString
 
+  /** Exact hit-file discovery, the scan behind every file-granular
+    * rewrite: read `files` with the `_dv_key` file key (computed inside
+    * the scan, so it survives a DV anti-join), keep the rows `narrow`
+    * keeps (a predicate filter or a key semi-join), and collect the
+    * distinct keys — a set bounded by the file count, never data —
+    * resolved to manifest entries. */
+  private def discoverHitFiles(spark: SparkSession, path: String, m: Manifest,
+                               files: Seq[String],
+                               narrow: DataFrame => DataFrame): Set[String] =
+    if (files.isEmpty) Set.empty
+    else {
+      val resolve = entryResolver(m.files)
+      narrow(readFiles(spark, path, m, files, keepDvKey = true))
+        .select("_dv_key").distinct().collect()
+        .map(r => resolve(r.getString(0))).toSet
+    }
+
+  /** Write the `(_dv_key, _dv_idx)` positions of `rows` as a fresh
+    * `<uuid>.dv` sidecar and count them per file FROM the written file,
+    * so the committed counts describe exactly the bytes on disk even
+    * under a non-deterministic condition. Returns the sidecar name and
+    * the per-entry counts; None, with the sidecar deleted, when no row
+    * was written. */
+  private def writeDv(spark: SparkSession, path: String, m: Manifest,
+                      rows: DataFrame): Option[(String, Map[String, Long])] = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
+    val dvFile = dvPath(path, dvName)
+    rows.select(col("_dv_key").as("f"), col("_dv_idx").cast("long").as("row_index"))
+      .write.parquet(dvFile)
+    val perKey = spark.read.parquet(dvFile).groupBy("f")
+      .agg(count(lit(1)).as("n")).collect()
+    if (perKey.isEmpty) {
+      fsFor(spark, path).delete(new Path(dvFile), true)
+      None
+    } else {
+      val resolve = entryResolver(m.files)
+      Some(dvName -> perKey.map(r => resolve(r.getString(0)) -> r.getLong(1)).toMap)
+    }
+  }
+
   /** The data-skipping planner: files of a version whose tracked
     * [min, max] could intersect [lower, upper] on `colName`. Files
     * without a stats entry (all-null, or committed before stats were
     * tracked) are kept — pruning is an optimization, never a filter.
-    * Numeric columns compare as exact decimals, everything else
-    * lexicographically (the parquet min/max contract). */
+    * The vote is the stats-v2 contract's ([[TsStatsPrefix]] below):
+    * the same one the `graft-txlog` planner runs. */
   def prunedFiles(spark: SparkSession, path: String, colName: String,
                   lower: Any, upper: Any,
                   version: Option[Long] = None): Seq[String] = {
@@ -2264,12 +2294,16 @@ object TxLog {
     *  - NumericType: plain decimal string, compared as BigDecimal
     *    (NaN/Infinity bounds fail open).
     *  - DateType/StringType: Cast-to-string — zero-padded ISO dates
-    *    and identity strings, where lexicographic IS the value order.
+    *    and identity strings, compared in UTF-8 BYTE order (Spark's
+    *    string order, the one min/max wrote the bounds in — not
+    *    `String.compareTo`'s UTF-16 order).
     *  - everything else (boolean, binary, intervals): recorded but
-    *    never voted — no order-preserving string encoding. */
+    *    never voted — no order-preserving string encoding.
+    * Query bounds encode through [[statsBound]], compare through
+    * [[statsCompare]] and vote through [[statsAdmits]] — the one vote
+    * every pruning caller runs. */
   private[graft] val TsStatsPrefix = "us:"
 
-  /** The column expression that produces a value's stats-v2 string. */
   /** A declared VARIANT-PATH stats column — the `v:$.k` spelling (r17
     * verdict #8): `<column>:$.<path>[:<type>]`, where `<type>` defaults
     * to double (numeric-range skipping, the common case) and may be
@@ -2372,39 +2406,69 @@ object TxLog {
     * bounds, so comparisons are exact: timestamps to `us:` micros
     * (strings already in stats encoding pass through; other values
     * cast to timestamp under the session tz first), everything else
-    * Cast-to-string under the session tz. None = unencodable —
-    * the caller must fail OPEN (keep the file). */
-  private def statsEncodeBound(dt: org.apache.spark.sql.types.DataType,
-                               tz: String, v: Any): Option[String] = v match {
-    case s: String if dt == org.apache.spark.sql.types.TimestampType &&
-      s.startsWith(TsStatsPrefix) => Some(s)
-    case _ => scala.util.Try {
-      val l = org.apache.spark.sql.catalyst.expressions.Literal(v)
-      dt match {
-        case org.apache.spark.sql.types.TimestampType =>
-          val micros =
-            if (l.dataType == org.apache.spark.sql.types.TimestampType) l.value
-            else org.apache.spark.sql.catalyst.expressions
-              .Cast(l, org.apache.spark.sql.types.TimestampType, Some(tz)).eval(null)
-          Option(micros).map(TsStatsPrefix + _)
-        case _ =>
-          Option(org.apache.spark.sql.catalyst.expressions
-            .Cast(l, org.apache.spark.sql.types.StringType, Some(tz))
-            .eval(null)).map(_.toString)
-      }
+    * Cast-to-string under the session tz. None = unencodable — that
+    * side of the vote fails OPEN. */
+  private[graft] def statsBound(dt: org.apache.spark.sql.types.DataType,
+                                tz: String,
+                                l: org.apache.spark.sql.catalyst.expressions.Literal)
+      : Option[String] = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.types.{StringType, TimestampType}
+    scala.util.Try {
+      if (dt != TimestampType)
+        Option(Cast(l, StringType, Some(tz)).eval(null)).map(_.toString)
+      else if (l.dataType == StringType && l.value != null &&
+          l.value.toString.startsWith(TsStatsPrefix)) Some(l.value.toString)
+      else if (l.dataType == TimestampType) Option(l.value).map(TsStatsPrefix + _)
+      else Option(Cast(l, TimestampType, Some(tz)).eval(null)).map(TsStatsPrefix + _)
     }.toOption.flatten
   }
 
+  /** How two stats-encoded bounds compare; None = an operand does not
+    * decode (NaN/Infinity decimals, legacy timestamp strings) and the
+    * vote fails open. */
+  private[graft] type StatsCompare = (String, String) => Option[Int]
+
+  /** The comparison a stats column's type votes with, or None for a
+    * type with no order-preserving encoding (it never votes). Strings
+    * and dates compare in UTF-8 BYTE order — the order Spark's min/max
+    * wrote the bounds in; `String.compareTo` orders UTF-16 code units,
+    * which disagrees above U+FFFF and would skip rows the query needs. */
+  private[graft] def statsCompare(dt: org.apache.spark.sql.types.DataType)
+      : Option[StatsCompare] = {
+    import org.apache.spark.sql.types.{DateType, NumericType, StringType, TimestampType}
+    import org.apache.spark.unsafe.types.UTF8String
+    dt match {
+      case _: NumericType => Some((a, b) =>
+        scala.util.Try(BigDecimal(a).compare(BigDecimal(b))).toOption)
+      case TimestampType => Some((a, b) =>
+        for { x <- tsStatsDecode(a); y <- tsStatsDecode(b) } yield x.compare(y))
+      case DateType | StringType => Some((a, b) =>
+        Some(UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))))
+      case _ => None
+    }
+  }
+
+  /** THE min/max vote: may a file whose stats entry is `stat` hold a
+    * value in [lo, hi] (either side open when None)? A stats-less file
+    * is kept — pruning is an optimization, never a filter. Shared by
+    * [[pruneByRange]] and the `graft-txlog` planner's driver walk and
+    * distributed listing. */
+  private[graft] def statsAdmits(stat: Option[(String, String)],
+                                 cmp: StatsCompare,
+                                 lo: Option[String], hi: Option[String]): Boolean =
+    stat.forall { case (mn, mx) =>
+      lo.forall(l => cmp(mx, l).forall(_ >= 0)) &&
+        hi.forall(h => cmp(mn, h).forall(_ <= 0))
+    }
+
   /** [[prunedFiles]]'s min/max overlap rule over an ARBITRARY
-    * candidate subset under the stats-v2 encoding contract (see
-    * [[statsEncode]]); stats-less files, unencodable bounds and
-    * non-order-preserving types are all conservatively kept — pruning
-    * is an optimization, never a filter. The caller guarantees
-    * `colName` is a tracked stats column. */
+    * candidate subset: the shared vote ([[statsAdmits]]) with both
+    * bounds encoded by [[statsBound]]. The caller guarantees `colName`
+    * is a tracked stats column. */
   private def pruneByRange(m: Manifest, schema: StructType,
                            files: Seq[String], colName: String,
                            lower: Any, upper: Any, tz: String): Seq[String] = {
-    import org.apache.spark.sql.types.{DateType, NumericType, StringType, TimestampType}
     val dt = statsColType(schema, colName)
     // stats are keyed by PHYSICAL name (stable across renames); a
     // variant-path spelling is its own key (renaming the base variant
@@ -2412,30 +2476,15 @@ object TxLog {
     val statsKey =
       if (parseVariantStats(colName).isDefined) colName
       else physOf(m, colName)
-    def dec(s: String): Option[BigDecimal] = scala.util.Try(BigDecimal(s)).toOption
-    val loEnc = statsEncodeBound(dt, tz, lower)
-    val hiEnc = statsEncodeBound(dt, tz, upper)
-    def overlaps(mn: String, mx: String): Boolean = dt match {
-      case _: NumericType =>
-        // NaN/Infinity bounds don't parse as decimals — fail OPEN
-        (for { lo <- loEnc.flatMap(dec); hi <- hiEnc.flatMap(dec)
-               a <- dec(mn); b <- dec(mx) } yield b >= lo && a <= hi)
-          .getOrElse(true)
-      case TimestampType =>
-        (for { lo <- loEnc.flatMap(tsStatsDecode); hi <- hiEnc.flatMap(tsStatsDecode)
-               a <- tsStatsDecode(mn); b <- tsStatsDecode(mx) } yield b >= lo && a <= hi)
-          .getOrElse(true)
-      case DateType | StringType =>
-        // zero-padded ISO / identity: lexicographic IS the value order
-        (for { lo <- loEnc; hi <- hiEnc } yield mx >= lo && mn <= hi)
-          .getOrElse(true)
-      case _ => true // no order-preserving string encoding: never vote
-    }
-    files.filter { f =>
-      m.fileStats.get(f).flatMap(_.get(statsKey)) match {
-        case Some((mn, mx)) => overlaps(mn, mx)
-        case None => true
-      }
+    def enc(v: Any): Option[String] =
+      scala.util.Try(org.apache.spark.sql.catalyst.expressions.Literal(v)).toOption
+        .flatMap(statsBound(dt, tz, _))
+    statsCompare(dt) match {
+      case None => files
+      case Some(cmp) =>
+        val (lo, hi) = (enc(lower), enc(upper))
+        files.filter(f =>
+          statsAdmits(m.fileStats.get(f).flatMap(_.get(statsKey)), cmp, lo, hi))
     }
   }
 
@@ -3408,7 +3457,7 @@ object TxLog {
                              m: Manifest, op: String,
                              batchChecked: Boolean = false): Unit = {
     if (m.uniques.isEmpty) return
-    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.functions.col
     m.uniques.foreach { case (name, cols) =>
       cols.foreach(c =>
         if (!df.columns.contains(c))
@@ -3439,18 +3488,12 @@ object TxLog {
               "Nothing was committed.")
       }
       if (existingFiles.nonEmpty) {
-        val candidates =
-          if (cols.size == 1 && m.statsCols.contains(physOf(m, cols.head))) {
-            val k = cols.head
-            // bounds in the STATS encoding (timestamps as us:-micros)
-            // so the prune compares exactly what collectStats wrote
-            val bounds = df.agg(statsEncode(schema(k).dataType, min(col(k))),
-              statsEncode(schema(k).dataType, max(col(k)))).head()
-            if (bounds.isNullAt(0)) Nil // empty batch: nothing can collide
-            else pruneByRange(m, schema, existingFiles, k,
-              bounds.getString(0), bounds.getString(1),
-              spark.sessionState.conf.sessionLocalTimeZone)
-          } else existingFiles
+        val candidates = keyStatsBounds(df, m, schema, cols) match {
+          case None => existingFiles
+          case Some(None) => Nil // empty batch: nothing can collide
+          case Some(Some((k, lo, hi))) => pruneByRange(m, schema, existingFiles,
+            k, lo, hi, spark.sessionState.conf.sessionLocalTimeZone)
+        }
         if (candidates.nonEmpty) {
           val collide = readFiles(spark, path, m, candidates)
             .select(cols.map(col): _*)
@@ -4435,7 +4478,7 @@ object TxLog {
                 evolveSchema: Boolean = false,
                 deletionVectors: Boolean = false,
                 txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit, max, min}
+    import org.apache.spark.sql.functions.{col, lit}
     val spark = updates.sparkSession
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
@@ -4539,32 +4582,9 @@ object TxLog {
       "mergeInto updates (within-batch)")
     warnUncoveredUniques(m, keys, "mergeInto")
     // ---- discovery stage 1+2: stats range prune, then Bloom vote ----
-    // the source-key bounds double as the commit's READ declaration:
-    // mergeRebaseCheck votes concurrently-added files against them,
-    // so disjoint-key concurrent merges rebase instead of conflicting
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val statsKeyed = keys.size == 1 && m.statsCols.contains(physOf(m, keys.head))
-    val boundsRow =
-      if (!statsKeyed) None
-      else {
-        val k = keys.head
-        // bounds in the STATS encoding (timestamps as us:-micros)
-        Some(updatesAligned.agg(statsEncode(widened(k).dataType, min(col(k))),
-          statsEncode(widened(k).dataType, max(col(k)))).head())
-      }
-    val sourceEmpty = boundsRow.exists(_.isNullAt(0))
-    val keyBounds: Option[(String, String, String)] =
-      boundsRow.filterNot(_.isNullAt(0))
-        .map(b => (keys.head, b.getString(0), b.getString(1)))
-    val discoveryFiles: Seq[String] =
-      if (!statsKeyed) m.files
-      else if (sourceEmpty) Nil // empty batch: nothing matches
-      else {
-        val byStats = pruneByRange(m, widened, m.files, keys.head,
-          keyBounds.get._2, keyBounds.get._3, tz)
-        bloomPruneByKeys(spark, path, physOf(m, keys.head),
-          boundedDistinct(updatesAligned, keys.head, 1024), byStats)
-      }
+    val (discoveryFiles, keyBounds, sourceEmpty) =
+      mergeCandidates(spark, path, m, widened, updatesAligned, keys)
     // ---- discovery stage 3: exact — which files HOLD a matched key ----
     // the validated key aggregate already holds exactly the distinct
     // keys (cached); only the preValidated lane still pays a distinct
@@ -4576,36 +4596,13 @@ object TxLog {
       // MERGE-ON-READ: the matched OLD rows' positions become a DV;
       // the updates append whole. Within-batch key uniqueness still
       // binds (two update rows for one key would BOTH land) — already
-      // vetted by the fused validation aggregate above.
-      // write FIRST, count from the written sidecar (one discovery
-      // scan total — the deleteWhere(dv) pattern)
-      val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
+      // vetted by the fused validation aggregate above. No DV when
+      // nothing matched: a pure insert.
       val addDv =
-        if (discoveryFiles.isEmpty) Nil // pure insert
-        else {
+        if (discoveryFiles.isEmpty) Nil
+        else writeDv(spark, path, m,
           padNewCols(readFiles(spark, path, m, discoveryFiles, keepDvKey = true))
-            .select(keys.map(col) :+ col("_dv_key") :+ col("_dv_idx"): _*)
-            .join(updKeys, keys, "left_semi")
-            .select(col("_dv_key").as("f"),
-              col("_dv_idx").cast("long").as("row_index"))
-            .write.parquet(dvPath(path, dvName))
-          val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-            .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-            .collect().map(r => r.getString(0) -> r.getLong(1))
-          if (perKey.isEmpty) {
-            fsFor(spark, path).delete(new Path(dvPath(path, dvName)), true)
-            Nil // updates matched nothing: pure insert
-          } else {
-            val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-            Seq(dvName -> perKey.map { case (suffix, n) =>
-              bySuffix.get(suffix)
-                .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-                .getOrElse(throw new IllegalStateException(
-                  s"TxLog.mergeInto(dv): scan key '$suffix' does not map " +
-                    "back to any manifest entry")) -> n
-            }.toMap)
-          }
-        }
+            .join(updKeys, keys, "left_semi")).toSeq
       val newFiles = stageIn(toPhysical(updatesAligned, m.colMap), path,
         physPartCols(m), transformsOf(m))
       // write-time CDC: matched olds (the same deterministic semi-join
@@ -4632,17 +4629,8 @@ object TxLog {
           discoveryFiles.toSet, addDv.flatMap(_._2.keys).toSet, tz)),
         cdc = cdc)
     }
-    // the file key is the _dv_key column, not input_file_name():
-    // computed inside each single-source scan, it survives the DV
-    // anti-join a deletion-vector-bearing snapshot adds to the plan
-    val hitUris: Array[String] =
-      if (discoveryFiles.isEmpty) Array.empty
-      else padNewCols(readFiles(spark, path, m, discoveryFiles, keepDvKey = true))
-        .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
-        .join(updKeys, keys, "left_semi")
-        .select("_gf").distinct().collect().map(_.getString(0))
-    val resolve = entryResolver(m.files)
-    val hitFiles = hitUris.map(resolve).toSet
+    val hitFiles = discoverHitFiles(spark, path, m, discoveryFiles,
+      d => padNewCols(d).join(updKeys, keys, "left_semi"))
     // merge = rows of the hit files with updates applied (updates win),
     // plus inserts; staged per-partition so moved keys land right
     val hitRows = padNewCols(readFiles(spark, path, m, hitFiles.toSeq))
@@ -4763,7 +4751,7 @@ object TxLog {
                             deletionVectors: Boolean,
                             txn: Option[(String, Long)],
                             evolveSchema: Boolean): Long = {
-    import org.apache.spark.sql.functions.{col, expr, lit, max, min, struct, when}
+    import org.apache.spark.sql.functions.{col, expr, lit, struct, when}
     val spark = source.sparkSession
     require(keys.nonEmpty, "TxLog.mergeWhen: empty key set")
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
@@ -4863,30 +4851,10 @@ object TxLog {
     require(dup.isEmpty,
       s"TxLog.mergeWhen: duplicate source rows for key (${keys.mkString(",")})")
     warnUncoveredUniques(m, keys, "mergeWhen")
-    // ---- discovery (same staircase as mergeInto) ----
+    // ---- discovery: stats range prune, then Bloom vote ----
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val statsKeyed = keys.size == 1 && m.statsCols.contains(physOf(m, keys.head))
-    val boundsRow =
-      if (!statsKeyed) None
-      else {
-        val k = keys.head
-        Some(source.agg(
-          statsEncode(declared(k).dataType, min(col(k))),
-          statsEncode(declared(k).dataType, max(col(k)))).head())
-      }
-    val sourceEmpty = boundsRow.exists(_.isNullAt(0))
-    val keyBounds: Option[(String, String, String)] =
-      boundsRow.filterNot(_.isNullAt(0))
-        .map(b => (keys.head, b.getString(0), b.getString(1)))
-    val discoveryFiles: Seq[String] =
-      if (!statsKeyed) m.files
-      else if (sourceEmpty) Nil
-      else {
-        val byStats = pruneByRange(m, declared, m.files, keys.head,
-          keyBounds.get._2, keyBounds.get._3, tz)
-        bloomPruneByKeys(spark, path, physOf(m, keys.head),
-          boundedDistinct(source, keys.head, 1024), byStats)
-      }
+    val (discoveryFiles, keyBounds, sourceEmpty) =
+      mergeCandidates(spark, path, m, declared, source, keys)
     // a NOT MATCHED BY SOURCE clause makes EVERY target row (including
     // rows of concurrently-added files) load-bearing: the read
     // declaration widens to the whole table and nothing added/changed
@@ -4997,23 +4965,7 @@ object TxLog {
         written.foreach(vetWritten(_, "mergeWhen(dv)"))
         val addDv: Seq[(String, Map[String, Long])] =
           if (actioned.forall(_.isEmpty)) Nil
-          else {
-            val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
-            actioned.get.select(col("_dv_key").as("f"),
-                col("_dv_idx").cast("long").as("row_index"))
-              .write.parquet(dvPath(path, dvName))
-            val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-              .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-              .collect().map(r => r.getString(0) -> r.getLong(1))
-            val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-            Seq(dvName -> perKey.map { case (suffix, n) =>
-              bySuffix.get(suffix)
-                .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-                .getOrElse(throw new IllegalStateException(
-                  s"TxLog.mergeWhen(dv): scan key '$suffix' does not map " +
-                    "back to any manifest entry")) -> n
-            }.toMap)
-          }
+          else writeDv(spark, path, m, actioned.get).toSeq
         val staged = written.map(w => stageIn(toPhysical(w, m.colMap), path,
           physPartCols(m), transformsOf(m))).getOrElse(Nil)
         if (addDv.isEmpty && staged.isEmpty) // nothing matched any clause
@@ -5044,15 +4996,9 @@ object TxLog {
       } finally fsx.delete(tmp, true)
     }
     val hitFiles: Set[String] =
-      if (discoveryFiles.isEmpty || matched.isEmpty) Set.empty
-      else {
-        val resolve = entryResolver(m.files)
-        readFiles(spark, path, m, discoveryFiles, keepDvKey = true)
-          .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
-          .join(srcKeys, keys, "left_semi")
-          .select("_gf").distinct().collect().map(r => resolve(r.getString(0)))
-          .toSet
-      }
+      if (matched.isEmpty) Set.empty
+      else discoverHitFiles(spark, path, m, discoveryFiles,
+        _.join(srcKeys, keys, "left_semi"))
     val scopeFiles: Set[String] =
       if (notMatchedBySource.nonEmpty) m.files.toSet else hitFiles
     val scopeRows = padNewCols(readFiles(spark, path, m, scopeFiles.toSeq))
@@ -5130,6 +5076,44 @@ object TxLog {
       }
     }
   }
+
+  /** `df`'s key bounds in the STATS encoding (timestamps as us:-micros,
+    * so a prune compares exactly what collectStats wrote) when `keys`
+    * is one stats-tracked column — one aggregate job. None = no bounds
+    * to vote with (no job runs); Some(None) = `df` holds no non-null
+    * key; otherwise (key, min, max). */
+  private def keyStatsBounds(df: DataFrame, m: Manifest, schema: StructType,
+                             keys: Seq[String])
+      : Option[Option[(String, String, String)]] =
+    if (keys.size != 1 || !m.statsCols.contains(physOf(m, keys.head))) None
+    else {
+      import org.apache.spark.sql.functions.{col, max, min}
+      val k = keys.head
+      val b = df.agg(statsEncode(schema(k).dataType, min(col(k))),
+        statsEncode(schema(k).dataType, max(col(k)))).head()
+      Some(if (b.isNullAt(0)) None else Some((k, b.getString(0), b.getString(1))))
+    }
+
+  /** Merge discovery stages 1+2: the files that may hold one of
+    * `source`'s keys — stats range prune against the source's key
+    * bounds, then the Bloom vote over a bounded key set. Returns the
+    * candidates, the key bounds (the commit's READ declaration:
+    * [[mergeRebaseCheck]] votes concurrently-added files against them,
+    * so disjoint-key concurrent merges rebase instead of conflicting)
+    * and whether the source holds no key at all. */
+  private def mergeCandidates(spark: SparkSession, path: String, m: Manifest,
+                              schema: StructType, source: DataFrame,
+                              keys: Seq[String])
+      : (Seq[String], Option[(String, String, String)], Boolean) =
+    keyStatsBounds(source, m, schema, keys) match {
+      case None => (m.files, None, false)
+      case Some(None) => (Nil, None, true) // empty batch: nothing matches
+      case Some(bounds @ Some((k, lo, hi))) =>
+        val byStats = pruneByRange(m, schema, m.files, k, lo, hi,
+          spark.sessionState.conf.sessionLocalTimeZone)
+        (bloomPruneByKeys(spark, path, physOf(m, k),
+          boundedDistinct(source, k, 1024), byStats), bounds, false)
+    }
 
   /** INSERT OVERWRITE of whole partitions as ONE commit — Delta's
     * `replaceWhere` at partition granularity, the daily re-load
@@ -5243,7 +5227,7 @@ object TxLog {
   def deleteWhere(spark: SparkSession, path: String,
                   condition: org.apache.spark.sql.Column,
                   deletionVectors: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
     val m = manifest(spark, path, v)
@@ -5256,30 +5240,12 @@ object TxLog {
     if (deletionVectors || dvDeclared(m)) {
       // rows to delete, keyed exactly as reads key them — existing DVs
       // already filtered, so a row can never be deleted twice
-      val newDel = readFiles(spark, path, m, m.files, keepDvKey = true)
-        .filter(hit)
-        .select(col("_dv_key").as("f"), col("_dv_idx").cast("long").as("row_index"))
-      // write FIRST, count from the written sidecar: one table-sized
-      // scan total, and the committed counts describe exactly the
-      // bytes on disk even under a non-deterministic condition
-      val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
-      newDel.write.parquet(dvPath(path, dvName))
-      val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-        .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1))
-      if (perKey.isEmpty) {
-        fsFor(spark, path).delete(new Path(dvPath(path, dvName)), true)
-        return v
-      }
-      // suffix keys → manifest entries (raw first, URL-decoded fallback)
-      val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-      val counts = perKey.map { case (suffix, n) =>
-        bySuffix.get(suffix)
-          .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-          .getOrElse(throw new IllegalStateException(
-            s"TxLog.deleteWhere(dv): scan key '$suffix' does not map back " +
-              "to any manifest entry")) -> n
-      }.toMap
+      // (one table-sized scan total: the sidecar is written first and
+      // counted from disk)
+      val written = writeDv(spark, path, m,
+        readFiles(spark, path, m, m.files, keepDvKey = true).filter(hit))
+      if (written.isEmpty) return v
+      val (dvName, counts) = written.get
       // BLIND appends never conflict a delete: the delete serializes
       // FIRST (its snapshot never contained the appended rows — the
       // Delta rule). The DV-targeted files must survive (dvLiveFor
@@ -5306,15 +5272,8 @@ object TxLog {
         rebaseCheck = Some(predicateRebaseCheck(spark, path, schema,
           dvTargets, "UTC")), cdc = cdc)
     } else {
-      // exact hit-file discovery: the scan prunes to the condition's
-      // columns; the collected set is bounded by the live file count
-      // (_dv_key, not input_file_name — it survives the DV anti-join)
-      val uris = readFiles(spark, path, m, m.files, keepDvKey = true)
-        .filter(hit).select(col("_dv_key").as("_f"))
-        .distinct().collect().map(_.getString(0))
-      if (uris.isEmpty) return v
-      val resolve = entryResolver(m.files)
-      val hitFiles = uris.map(resolve).toSet
+      val hitFiles = discoverHitFiles(spark, path, m, m.files, _.filter(hit))
+      if (hitFiles.isEmpty) return v
       val newFiles = stageIn(
         toPhysical(readFiles(spark, path, m, hitFiles.toSeq)
           .filter(not(hit)), m.colMap),
@@ -5377,12 +5336,7 @@ object TxLog {
         s"TxLog.replaceWhere: $outside incoming row(s) do not satisfy " +
           "the predicate — an overwrite of a region must stay inside it")
       enforceConstraints(df, m.constraints, "replaceWhere")
-      // hit-file discovery, the deleteWhere shape
-      val uris = readFiles(spark, path, m, m.files, keepDvKey = true)
-        .filter(hit).select(col("_dv_key").as("_f"))
-        .distinct().collect().map(_.getString(0))
-      val resolve = entryResolver(m.files)
-      val hitFiles = uris.map(resolve).toSet
+      val hitFiles = discoverHitFiles(spark, path, m, m.files, _.filter(hit))
       // UNIQUE probe against the POST-replace state: untouched files
       // via the standard probe, hit files' SURVIVOR rows via one
       // bounded join (replaced-away keys must not block the backfill)
@@ -5455,7 +5409,7 @@ object TxLog {
                   set: Seq[(String, String)],
                   condition: org.apache.spark.sql.Column,
                   deletionVectors: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, not, when}
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not, when}
     require(set.nonEmpty, "TxLog.updateWhere: empty SET list")
     require(set.map(_._1).distinct.size == set.size,
       s"TxLog.updateWhere: duplicate assignment in ${set.map(_._1).mkString(", ")}")
@@ -5504,21 +5458,8 @@ object TxLog {
           matched.select(schema.fieldNames.map(col).toIndexedSeq: _*),
           everyRowMatched = true)
         enforceConstraints(images, m.constraints, "updateWhere")
-        val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
-        matched
-          .select(col("_dv_key").as("f"), col("_dv_idx").cast("long").as("row_index"))
-          .write.parquet(dvPath(path, dvName))
-        val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-        val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-        val counts = perKey.map { case (suffix, n) =>
-          bySuffix.get(suffix)
-            .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-            .getOrElse(throw new IllegalStateException(
-              s"TxLog.updateWhere(dv): scan key '$suffix' does not map back " +
-                "to any manifest entry")) -> n
-        }.toMap
+        // `matched` is non-empty, so a sidecar is always written
+        val (dvName, counts) = writeDv(spark, path, m, matched).get
         val staged = stageIn(toPhysical(images, m.colMap), path,
           physPartCols(m), transformsOf(m))
         // same read declaration as DELETE (DV): the update serializes
@@ -5540,13 +5481,8 @@ object TxLog {
             dvTargets, "UTC")), cdc = cdc)
       } finally fs.delete(tmp, true)
     } else {
-      // exact hit-file discovery, identical to DELETE's
-      val uris = readFiles(spark, path, m, m.files, keepDvKey = true)
-        .filter(hit).select(col("_dv_key").as("_f"))
-        .distinct().collect().map(_.getString(0))
-      if (uris.isEmpty) return v
-      val resolve = entryResolver(m.files)
-      val hitFiles = uris.map(resolve).toSet
+      val hitFiles = discoverHitFiles(spark, path, m, m.files, _.filter(hit))
+      if (hitFiles.isEmpty) return v
       val snap = readFiles(spark, path, m, hitFiles.toSeq)
       enforceConstraints(assigned(snap.filter(hit), everyRowMatched = true),
         m.constraints, "updateWhere")
@@ -6094,7 +6030,7 @@ object TxLog {
   def applyChanges(path: String, feed: DataFrame, keys: Seq[String],
                    preValidated: Boolean = false,
                    txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max, min}
+    import org.apache.spark.sql.functions.{col, lit}
     val spark = feed.sparkSession
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
@@ -6137,12 +6073,8 @@ object TxLog {
     // old side of a moved key); upsert rows for keys the table lacks
     // simply land as new files. One key-pruned semi-join scan.
     val feedKeys = feed.select(keys.map(col): _*).distinct()
-    val hitUris = readFiles(spark, path, m, m.files, keepDvKey = true)
-      .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
-      .join(feedKeys, keys, "left_semi")
-      .select("_gf").distinct().collect().map(_.getString(0))
-    val resolve = entryResolver(m.files)
-    val hitFiles = hitUris.map(resolve).toSet
+    val hitFiles = discoverHitFiles(spark, path, m, m.files,
+      _.join(feedKeys, keys, "left_semi"))
     if (hitFiles.isEmpty && upserts.limit(1).collect().isEmpty)
       return sealNoopTxn(spark, path, m, txn, "APPLY CHANGES")
     val hitRows = readFiles(spark, path, m, hitFiles.toSeq)
@@ -6154,13 +6086,7 @@ object TxLog {
     // key bounds admit concurrently-added files outside the changed
     // key range, so disjoint CDC lanes into one table don't serialize
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val keyBounds: Option[(String, String, String)] =
-      if (keys.size == 1 && m.statsCols.contains(physOf(m, keys.head))) {
-        val k = keys.head
-        val b = feed.agg(statsEncode(declared(k).dataType, min(col(k))),
-          statsEncode(declared(k).dataType, max(col(k)))).head()
-        if (b.isNullAt(0)) None else Some((k, b.getString(0), b.getString(1)))
-      } else None
+    val keyBounds = keyStatsBounds(feed, m, declared, keys).flatten
     // write-time CDC: the feed re-expressed as the EFFECT on this
     // table (a feed "insert" for a key the replica already holds is an
     // update here; a "delete" for an absent key is no event)
@@ -6263,35 +6189,20 @@ object TxLog {
     val picked = withPos.join(removals, cond, "inner")
       .withColumn("_rn", row_number().over(ow))
       .filter(col("_rn") <= col("_need"))
-      .select(col("_dv_key").as("f"),
-        col("_dv_idx").cast("long").as("row_index"))
     val (addDv, cdcDeleteSrc) =
       if (needTotal == 0L) (Nil: Seq[(String, Map[String, Long])], None)
       else {
-        // write FIRST, count from the written sidecar (the deleteWhere
-        // pattern: committed counts describe exactly the bytes on disk)
-        val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
-        picked.write.parquet(dvPath(path, dvName))
-        val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-        val pickedTotal = perKey.map(_._2).sum
+        val written = writeDv(spark, path, m, picked)
+        val pickedTotal = written.map(_._2.values.sum).getOrElse(0L)
         require(pickedTotal == needTotal, {
-          fsFor(spark, path).delete(new Path(dvPath(path, dvName)), true)
+          written.foreach { case (dvName, _) =>
+            fsFor(spark, path).delete(new Path(dvPath(path, dvName)), true) }
           s"TxLog.applyChangeEvents: the feed deletes $needTotal row " +
             s"occurrence(s) but the replica holds only $pickedTotal " +
             "matching live row(s) — the replica has drifted from the " +
             "feed's source; refuse loudly rather than skip events"
         })
-        val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-        val counts = perKey.map { case (suffix, n) =>
-          bySuffix.get(suffix)
-            .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-            .getOrElse(throw new IllegalStateException(
-              s"TxLog.applyChangeEvents: scan key '$suffix' does not map " +
-                "back to any manifest entry")) -> n
-        }.toMap
-        (Seq(dvName -> counts), Some(dvName))
+        (written.toSeq, written.map(_._1))
       }
     val newFiles =
       if (!haveAdds) Nil
@@ -7189,23 +7100,10 @@ object TxLog {
     if (missing.isEmpty) return 0
     import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
     import spark.implicits._
-    // input_file_name URIs map back to manifest entries by their
-    // data-root-relative suffix. input_file_name returns the
-    // URL-ENCODED form while manifest entries are raw filesystem
-    // names, so lookups try the raw suffix first and fall back to its
-    // decoded form; an unresolvable suffix fails LOUDLY rather than
-    // with a bare NoSuchElementException (review finding).
-    val bySuffix = missing.map(f => relEntry(f) -> f).toMap
-    def entryOf(uri: String): String = {
-      val i = uri.lastIndexOf("/data/")
-      val suffix = uri.substring(i + "/data/".length)
-      bySuffix.get(suffix)
-        .orElse(bySuffix.get(
-          java.net.URLDecoder.decode(suffix, "UTF-8")))
-        .getOrElse(throw new IllegalStateException(
-          s"TxLog.buildBloomIndex: scan file '$uri' does not map back " +
-            "to any manifest entry — partition value encoding mismatch"))
-    }
+    // input_file_name URIs map back to manifest entries through
+    // entryResolver (raw suffix, then its URL-decoded form, loud
+    // failure otherwise)
+    val entryOf = entryResolver(missing)
     val hashed = readFiles(spark, path, m, missing)
       .select(input_file_name().as("_f"),
         xxhash64(col(colName).cast("string")).as("_h"))
@@ -7217,25 +7115,12 @@ object TxLog {
       if (known.size == missing.size) Map.empty
       else hashed.groupBy("_f").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // per-URI expected sizes resolve on the driver (file-count-bounded
-    // maps) and ride the task closure
-    val sizeOfUri: Map[String, Long] =
-      if (counts.nonEmpty) counts
-      else Map.empty
-    val sizeOfEntry = known
-    // pass 2: stream rows into exactly-sized filters, ship bytes only
-    val localBySuffix = bySuffix
+    // pass 2: stream rows into exactly-sized filters, ship bytes only;
+    // the expected sizes (file-count-bounded maps) ride the task closure
     val blooms = hashed.as[(String, Long)]
       .groupByKey(_._1)
       .mapGroups { (f, it) =>
-        val expected = sizeOfUri.getOrElse(f, {
-          val i = f.lastIndexOf("/data/")
-          val suffix = f.substring(i + "/data/".length)
-          val entry = localBySuffix.get(suffix)
-            .orElse(localBySuffix.get(
-              java.net.URLDecoder.decode(suffix, "UTF-8")))
-          entry.flatMap(sizeOfEntry.get).getOrElse(1L)
-        })
+        val expected = counts.getOrElse(f, known.getOrElse(entryOf(f), 1L))
         val bf = org.apache.spark.util.sketch.BloomFilter
           .create(math.max(expected, 1L), fpp)
         it.foreach { case (_, h) => bf.putLong(h) }
@@ -7261,20 +7146,8 @@ object TxLog {
     val v = version.orElse(currentVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
     val byStats = prunedFiles(spark, path, colName, value, value, Some(v))
-    val fs = fsFor(spark, path)
-    val dir = bloomDir(path, physOf(manifest(spark, path, v), colName))
-    if (!fs.exists(dir)) return byStats
-    val h = keyHash(value)
-    byStats.filter { f =>
-      val p = new Path(dir, sidecarName(f))
-      if (!fs.exists(p)) true
-      else {
-        val in = fs.open(p)
-        try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-          .mightContainLong(h)
-        finally in.close()
-      }
-    }
+    bloomPruneByKeys(spark, path, physOf(manifest(spark, path, v), colName),
+      Seq(value), byStats)
   }
 
   /** Point lookup WITH Bloom + stats skipping: semantically identical
