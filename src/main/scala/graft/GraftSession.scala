@@ -38,6 +38,21 @@ object GraftSession {
       // at each young GC. 256k keeps the buffer an ordinary young
       // allocation; large broadcasts split into more pieces.
       .config("spark.broadcast.blockSize", "256k")
+      // without Hadoop's native library, the stock `file:` FileSystem
+      // sets every file's, `.crc` sidecar's and directory's permissions
+      // by forking a `chmod` process: JFR counted 885 of them in one
+      // 12 s perfbench gwas_ingest run on a 4-core host, and the run's
+      // load p50 fell 405 → 349 ms without them. NioLocalFileSystem
+      // sets the same bits in-process. `spark.hadoop.*` reaches the
+      // driver's and the executors' Hadoop conf, so this covers the
+      // TxLog commit path, Spark's commit protocol and the parquet
+      // writers alike. Hadoop caches one FileSystem per scheme and user,
+      // so the first `file:` instance in a JVM wins: a session this
+      // factory did not build (graft.Bench and graft.Verify build their
+      // own), or one built after something else opened `file:`, keeps
+      // the stock class and only misses the speed-up.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.storage.NioLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(spark)

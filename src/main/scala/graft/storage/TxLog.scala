@@ -2201,8 +2201,7 @@ object TxLog {
     val filtered =
       if (dvRelevant.isEmpty) scanned
       else {
-        val dvDf = spark.read
-          .parquet(dvRelevant.map { case (f, _) => dvPath(path, f) }: _*)
+        val dvDf = readDv(spark, dvRelevant.map { case (f, _) => dvPath(path, f) })
           .select(col("f").as("_dv_key"), col("row_index").as("_dv_idx"))
         // DV rows are delete-sized: AQE broadcasts the anti-join side
         scanned.join(dvDf, Seq("_dv_key", "_dv_idx"), "left_anti")
@@ -2221,6 +2220,13 @@ object TxLog {
     * source's DV dir). */
   private[graft] def dvPath(path: String, f: String): String =
     if (isAbsEntry(f)) f else new Path(new Path(path, "_dv"), f).toString
+
+  /** Read `.dv` sidecars with their fixed schema: without it every read
+    * would run Spark's schema-inference job over the sidecar's footer. */
+  private def readDv(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(files: _*)
+
+  private val DvSchema = StructType.fromDDL("f STRING, row_index BIGINT")
 
   /** Exact hit-file discovery, the scan behind every file-granular
     * rewrite: read `files` with the `_dv_key` file key (computed inside
@@ -2252,7 +2258,7 @@ object TxLog {
     val dvFile = dvPath(path, dvName)
     rows.select(col("_dv_key").as("f"), col("_dv_idx").cast("long").as("row_index"))
       .write.parquet(dvFile)
-    val perKey = spark.read.parquet(dvFile).groupBy("f")
+    val perKey = readDv(spark, Seq(dvFile)).groupBy("f")
       .agg(count(lit(1)).as("n")).collect()
     if (perKey.isEmpty) {
       fsFor(spark, path).delete(new Path(dvFile), true)
@@ -5259,7 +5265,7 @@ object TxLog {
       // under a non-deterministic condition), scanning only the
       // DV-targeted files
       val cdc = captureCdc(spark, path, m, {
-        val sidecar = spark.read.parquet(dvPath(path, dvName))
+        val sidecar = readDv(spark, Seq(dvPath(path, dvName)))
         val rows = readFiles(spark, path, m, dvTargets.toSeq, keepDvKey = true)
         rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
             rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi")
@@ -5824,8 +5830,7 @@ object TxLog {
         if (dv.isEmpty)
           spark.emptyDataFrame
             .select(lit("").as("_dv_key"), lit(0L).as("_dv_idx")).limit(0)
-        else spark.read
-          .parquet(dv.map { case (f, _) => dvPath(path, f) }: _*)
+        else readDv(spark, dv.map { case (f, _) => dvPath(path, f) })
           .select(col("f").as("_dv_key"), col("row_index").as("_dv_idx"))
           // a DV parquet can cover entries outside the drifted set —
           // restrict before the position-set difference
@@ -6212,7 +6217,7 @@ object TxLog {
     // inserts, the written sidecar's positions joined back as deletes
     val cdc = captureCdc(spark, path, m, {
       val dels = cdcDeleteSrc.map { dvName =>
-        val sidecar = spark.read.parquet(dvPath(path, dvName))
+        val sidecar = readDv(spark, Seq(dvPath(path, dvName)))
         val rows = readFiles(spark, path, m, m.files, keepDvKey = true)
         rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
             rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi")

@@ -762,15 +762,24 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.read(spark, path).count() == 7L)
   }
 
-  test("building a read runs no Spark job: read, readWithPosition, readBetween over a 40-file version") {
-    // above Spark's 32-path parallel-listing threshold: a read planned
-    // from the file list as paths would stat them in a listing JOB
-    val path = freshPath("nojob")
+  /** k = 0..399 over partitions 0..3 in 40 files: above Spark's
+    * 32-path parallel-listing threshold, so a read planned from the
+    * file list as paths would stat them in a listing JOB. */
+  private def fortyFileTable(tag: String): String = {
+    val path = freshPath(tag)
     TxLog.create(spark.range(0, 400).select(col("id").as("k"),
       (col("id") % 4).cast("string").as("part"), (col("id") * 0.5).as("v"))
       .repartition(10, col("k")), path, Some("part"), statsCols = Seq("k"))
     val m = TxLog.manifest(spark, path, TxLog.currentVersion(spark, path).get)
     assert(m.files.size == 40, s"fixture wants 40 files, got ${m.files.size}")
+    path
+  }
+
+  /** Build read, readWithPosition and readBetween(k in 100..199) of
+    * `path`, asserting that building them started no Spark job. */
+  private def buildReadsWithoutJobs(path: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+         org.apache.spark.sql.DataFrame) = {
     var jobs = 0
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -778,17 +787,31 @@ class TxLogSpec extends SparkSpec {
         jobs += 1
     }
     spark.sparkContext.addSparkListener(listener)
-    val (plain, withPos, between) =
-      try {
-        val built = (TxLog.read(spark, path), TxLog.readWithPosition(spark, path),
-          TxLog.readBetween(spark, path, "k", 100L, 199L))
-        Thread.sleep(500) // let any (unexpected) job-start events drain
-        assert(jobs == 0, s"building the three reads ran $jobs jobs")
-        built
-      } finally spark.sparkContext.removeSparkListener(listener)
+    try {
+      val built = (TxLog.read(spark, path), TxLog.readWithPosition(spark, path),
+        TxLog.readBetween(spark, path, "k", 100L, 199L))
+      Thread.sleep(500) // let any (unexpected) job-start events drain
+      assert(jobs == 0, s"building the three reads ran $jobs jobs")
+      built
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("building a read runs no Spark job: read, readWithPosition, readBetween over a 40-file version") {
+    val (plain, withPos, between) = buildReadsWithoutJobs(fortyFileTable("nojob"))
     assert(plain.count() == 400L)
     assert(withPos.select("_file", "_pos").distinct().count() == 400L)
     assert(between.count() == 100L)
+  }
+
+  test("building a read of a snapshot with a deletion vector runs no Spark job") {
+    // the DV sidecar is read with its fixed schema: no inference job
+    val path = fortyFileTable("nojob_dv")
+    TxLog.deleteWhere(spark, path, col("k").between(150L, 159L), deletionVectors = true)
+    assert(TxLog.manifest(spark, path, TxLog.currentVersion(spark, path).get).dv.nonEmpty)
+    val (plain, withPos, between) = buildReadsWithoutJobs(path)
+    assert(plain.count() == 390L)
+    assert(withPos.select("_file", "_pos").distinct().count() == 390L)
+    assert(between.count() == 90L)
   }
 
   test("fastCount + stats survive %-escaped partition values (URI decode fallback)") {
