@@ -23,6 +23,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       e.injectTableFunction((FunctionIdentifier(name), info, builder))
     }
     e.injectOptimizerRule(_ => graft.plans.WindowTopKRule)
+    // static half: sort inputs sized from files at planning; runtime
+    // half: AQE re-optimizes with a finished stage's measured size
+    e.injectOptimizerRule(_ => graft.plans.SmallSortRule)
+    e.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortRule)
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     // the V2-catalog bridge: graft.* reads lower onto the V1 mount,
     // DELETE/UPDATE/MERGE lower onto the transactional verbs
@@ -70,8 +74,13 @@ object GraftExtensions {
       })),
   )
 
-  /** Register functions + the TopK rewrite on an already-built session
-    * (the config-time path is `spark.sql.extensions=graft.GraftExtensions`). */
+  /** Register functions + the TopK and small-sort rewrites on an
+    * already-built session (the config-time path is
+    * `spark.sql.extensions=graft.GraftExtensions`). A live session takes
+    * no AQE runtime rule, so only [[graft.plans.SmallSortRule]]'s static
+    * half is added here: a sort over an aggregate, or over anything
+    * sized only once a stage has run, keeps its range exchange on such
+    * a session. */
   def register(spark: SparkSession): Unit = {
     descriptors.foreach { case (name, i, builder) =>
       org.apache.spark.sql.graftbridge.ExprBridge.registerFunction(spark, name, i, builder)
@@ -83,6 +92,9 @@ object GraftExtensions {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.WindowTopKRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.WindowTopKRule
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.SmallSortRule))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.plans.SmallSortRule
     if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.TopKStrategy

@@ -32,7 +32,11 @@ object GwasViews {
   def regionSql(chr: Int, start: Int, end: Int): String =
     s"SELECT * FROM combined WHERE chr = $chr AND pos BETWEEN $start AND $end"
 
-  /** app.R's marker search (app.R:96-101). */
-  def markerSearchSql(pattern: String): String =
-    s"SELECT kgp_id, chr, pos FROM b37 WHERE kgp_id RLIKE '$pattern' ORDER BY chr, pos"
+  /** app.R's marker search (app.R:96-101). The pattern becomes a SQL
+    * string literal, whose unescaping would eat its backslashes (`\d`
+    * → `d`) and end at its first quote, so both are escaped. */
+  def markerSearchSql(pattern: String): String = {
+    val literal = pattern.replace("\\", "\\\\").replace("'", "\\'")
+    s"SELECT kgp_id, chr, pos FROM b37 WHERE kgp_id RLIKE '$literal' ORDER BY chr, pos"
+  }
 }

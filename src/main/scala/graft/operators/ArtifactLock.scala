@@ -17,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * 60 s) and then refuses loudly — so concurrent appends serialize,
   * neither is lost, and nothing doubles. A LIVE holder refreshes
   * nothing: crash recovery is by AGE — a lock whose own content
-  * timestamp is older than `graft.index.staleLockMinutes` (default
-  * 15) is a dead holder's and is broken, which is what lets the
+  * timestamp is older than [[ArtifactLock.StaleLockMinutes]] (15) is
+  * a dead holder's and is broken, which is what lets the
   * crash-re-runnable appends (dropDuplicates guards, aside-dir
   * restore) re-enter after their own crash without an operator
   * unlocking by hand. Breaking ([[tryBreakStale]]) is settled by
@@ -52,6 +52,10 @@ import org.apache.spark.sql.SparkSession
   *    commit arbiter ([[graft.storage.CommitArbiter]]) instead of
   *    filesystem rename semantics. */
 object ArtifactLock {
+
+  /** Age after which a lock is a dead holder's: no maintenance verb
+    * holds the lock this long. */
+  val StaleLockMinutes = 15
 
   private def lockPath(artifact: String) = new Path(artifact, "_maint_lock")
 
@@ -187,8 +191,7 @@ object ArtifactLock {
     fs.mkdirs(new Path(artifact))
     val lock = lockPath(artifact)
     val owner = java.util.UUID.randomUUID().toString.take(16)
-    val staleMs = (spark.conf.getOption("graft.index.staleLockMinutes")
-      .map(_.toDouble).getOrElse(15.0) * 60 * 1000).toLong
+    val staleMs = StaleLockMinutes * 60 * 1000L
     val maxWaitMs = spark.conf.getOption("graft.index.lockWaitMs")
       .map(_.toLong).getOrElse(60000L)
     val deadline = System.currentTimeMillis() + maxWaitMs
@@ -229,7 +232,7 @@ object ArtifactLock {
                 s"${maxWaitMs} ms waiting for the maintenance lock — " +
                 "another maintainer holds it (graft.index.lockWaitMs " +
                 "raises the wait; a crashed holder's lock breaks after " +
-                "graft.index.staleLockMinutes)")
+                s"$StaleLockMinutes minutes)")
           else Thread.sleep(200)
         }
       }

@@ -137,6 +137,14 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("a small ORDER BY sorts in one partition: no range exchange (SmallSortRule)") {
+    // q_marker_search filters and sorts the sf0.001 part table, a few
+    // KB: a range exchange would add a sampling job and a second scan
+    val p = plan(ReferenceQueries.entries("q_marker_search")(spark, sf))
+    assert(p.contains("Sort [p_partkey") && !p.contains("rangepartitioning"),
+      s"small sort planned a range exchange:\n$p")
+  }
+
   test("aggregates partial-aggregate before shuffling (two HashAggregate phases)") {
     Seq(
       ReferenceQueries.chrCounts(spark, sf),

@@ -54,6 +54,20 @@ class SqlSurfaceSpec extends SparkSpec {
       s"facets were $facets")
   }
 
+  test("marker search: the SQL form matches GwasOps.markerSearch on backslashes and quotes") {
+    import graft.gwas.GwasOps
+    val b37 = Seq(("1:12345_A_T", 1, 12345), ("1:123_A_G", 1, 123), ("it's", 2, 7),
+      ("a\\b", 3, 9), ("ab", 3, 8)).toDF("kgp_id", "chr", "pos")
+    b37.createOrReplaceTempView("b37") // the one view the search reads
+    Seq("^1:\\d{5}" -> "1:12345_A_T", "it's" -> "it's", "a\\\\b" -> "a\\b").foreach {
+      case (pattern, hit) =>
+        val viaSql = spark.sql(GwasViews.markerSearchSql(pattern)).collect().toSeq
+        val viaDf = GwasOps.markerSearch(b37, pattern).collect().toSeq
+        assert(viaSql.map(_.getString(0)) == Seq(hit), s"pattern $pattern")
+        assert(viaSql == viaDf, s"pattern $pattern")
+    }
+  }
+
   test("no_gwas_result view serves the persisted QC audit feed by its reference name") {
     import graft.gwas.GwasOps
     val dir = java.nio.file.Files.createTempDirectory("graft_nogwas_view").toString + "/no_gwas_result"
