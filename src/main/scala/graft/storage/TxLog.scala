@@ -3494,11 +3494,13 @@ object TxLog {
               "Nothing was committed.")
       }
       if (existingFiles.nonEmpty) {
-        val candidates = keyStatsBounds(df, m, schema, cols) match {
+        val candidates = keyBoundCols(m, schema, cols) match {
           case None => existingFiles
-          case Some(None) => Nil // empty batch: nothing can collide
-          case Some(Some((k, lo, hi))) => pruneByRange(m, schema, existingFiles,
-            k, lo, hi, spark.sessionState.conf.sessionLocalTimeZone)
+          case Some(cs) => boundsAt(cols, df.agg(cs.head, cs.tail: _*).head(), 0) match {
+            case None => Nil // empty batch: nothing can collide
+            case Some((k, lo, hi)) => pruneByRange(m, schema, existingFiles,
+              k, lo, hi, spark.sessionState.conf.sessionLocalTimeZone)
+          }
         }
         if (candidates.nonEmpty) {
           val collide = readFiles(spark, path, m, candidates)
@@ -4447,44 +4449,24 @@ object TxLog {
         else s"OPTIMIZE ZORDER BY ${zorder.mkString(", ")}")
   }
 
-  /** Transactional merge — the plain-parquet equivalent of a Delta
-    * MERGE, with Delta's FILE-granular write economics: updates win on
-    * key collision, and the rewrite set is exactly the FILES that hold
-    * a matched key — every other file, including the rest of a hot
-    * partition, carries into the new manifest by reference and stays
-    * byte-identical on disk. A one-key merge into a date partition
-    * holding N files rewrites the one file whose stats admit the key,
-    * not the partition (r8's single biggest write-amplification gap).
-    *
-    * Discovery is three-stage, cheapest first:
-    *  1. min/max SKIP-INDEX prune (free — stats ride the manifest):
-    *     when the single merge key is a tracked stats column, only
-    *     files whose range admits the batch's key bounds are scanned;
-    *  2. Bloom-sidecar vote: for a bounded key set (≤1024 distinct),
-    *     each surviving file's point-lookup filter votes — an
-    *     id-scattered layout where min/max is useless still prunes;
-    *  3. exact membership: one key-column-pruned semi-join scan over
-    *     the surviving files collects which FILES actually hold a
-    *     matched key (file-count-bounded driver set, never data).
-    * Stats make the probe read small; exactness makes the WRITE set
-    * minimal. Inserts (keys matching nothing) land as new files in
-    * their partitions. The commit is a protocol-2 `removeFiles` delta
-    * — see [[ProtocolVersion]]. Returns the new version. */
-  /** `deletionVectors = true` switches the merge to MERGE-ON-READ
-    * (Delta's DV-based merge): instead of rewriting the files holding
-    * matched keys, the matched OLD rows' positions land as a
-    * delete-sized DV sidecar and the updates (new versions + inserts)
-    * append as new files — write cost is matched ROWS + update bytes,
-    * not matched FILES. The winner when a few keys update inside big
-    * files; OPTIMIZE later materializes. Same DV trade as
-    * [[deleteWhere]]: per-read anti-join until materialized,
-    * protocol-2 commits, append-tail refusal. */
+  /** Transactional merge (upsert) — the plain-parquet equivalent of a
+    * Delta MERGE: updates win on key collision and the batch's other
+    * rows insert. The clause set over [[mergeWhen]]'s engine:
+    * `WHEN MATCHED THEN UPDATE SET c = src.c` for every column the
+    * batch carries, `WHEN NOT MATCHED THEN INSERT *`. A whole-row
+    * update may move a key to another partition: its old row leaves
+    * with the file (or DV) it lived in, its new row stages in the new
+    * partition. Write economics, discovery and the DV mode are the
+    * engine's ([[mergeWhen]]); the table must be partitioned, carry no
+    * IDENTITY column, and with `evolveSchema` the batch must carry
+    * every declared column (a merged row has no third place to take a
+    * value from). `preValidated = true` skips the duplicate-key probe
+    * for a batch the caller already keyed. Returns the new version. */
   def mergeInto(path: String, updates: DataFrame, keys: Seq[String],
                 preValidated: Boolean = false,
                 evolveSchema: Boolean = false,
                 deletionVectors: Boolean = false,
                 txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
     val spark = updates.sparkSession
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
@@ -4494,8 +4476,7 @@ object TxLog {
     if (txn.exists { case (a, tv) => m.txns.get(a).exists(_ >= tv) }) return v
     requireWritable(m, path)
     requireAppendable(m, path, "mergeInto (an upsert rewrites matched rows)")
-    val pcs = m.partitionCols
-    require(pcs.nonEmpty,
+    require(m.partitionCols.nonEmpty,
       "TxLog.mergeInto needs a partitioned table (create with partitionCol[s])")
     require(identityColumns(m).isEmpty,
       s"TxLog.mergeInto: table has IDENTITY column(s) " +
@@ -4504,9 +4485,6 @@ object TxLog {
         "(its INSERT * allocates them)")
     val declared = StructType.fromDDL(m.schemaDdl)
     checkSchema(declared, updates.schema, evolveSchema)
-    // evolution: updates must carry every declared column (a merged row
-    // has no third place to take a value from); the EXISTING rows pad
-    // the new columns with typed nulls before the merge
     if (evolveSchema) {
       declared.fields.foreach(f => require(
         updates.schema.fieldNames.contains(f.name),
@@ -4517,164 +4495,15 @@ object TxLog {
           s"TxLog.mergeInto: new column '$n' collides with the physical " +
             "name of a renamed column"))
     }
-    // a NULL partition value would land under __HIVE_DEFAULT_PARTITION__
-    // — outside this operator's layout contract; fail loudly instead.
-    // Hidden layouts check the TRANSFORM SOURCE columns (the derived
-    // dir value of a null source is null too)
-    val partNullCols =
-      if (m.partitionSpec.isEmpty) pcs else transformsOf(m).map(_.src)
-    val widened = if (evolveSchema) widen(declared, updates.schema) else declared
-    def padNewCols(df: DataFrame): DataFrame =
-      widened.fields.filterNot(f => declared.fieldNames.contains(f.name))
-        .foldLeft(df)((d, f) =>
-          d.withColumn(f.name, lit(null).cast(f.dataType)))
-    val updatesAligned =
-      if (evolveSchema) updates.select(widened.fieldNames.map(col): _*)
-      else updates
-    // batch validation, FUSED into one job (r18 opt round): the
-    // null-partition probe and the within-batch duplicate-key probe
-    // each cost a full pass over the updates; one key-grouped
-    // aggregate answers both — any group with a null-partition member
-    // or more than one row is a violation, and the violation-sized
-    // second aggregate distinguishes which error to raise (null first,
-    // the order the separate probes checked in). With `preValidated`
-    // the caller owns uniqueness and only the null probe remains.
-    val partNullFlag = partNullCols.map(col(_).isNull).reduce(_ || _)
-    // r19: the fused-validation aggregate IS the distinct update-key
-    // set the discovery scans semi-join against — persist its
-    // key-sized result for the verb (released in the finally below)
-    // so the updates shuffle by key ONCE per merge, not once for the
-    // validation and again for updKeys (guide §2: same keying, one
-    // exchange). preValidated callers own uniqueness and skip both.
-    val keyAgg: Option[DataFrame] =
-      if (preValidated) None
-      else {
-        import org.apache.spark.sql.functions.{count, when}
-        Some(updatesAligned.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("__graft_c"),
-            org.apache.spark.sql.functions.max(
-              when(partNullFlag, lit(1)).otherwise(lit(0))).as("__graft_pn"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
-    try {
-    if (preValidated) {
-      require(updatesAligned.filter(partNullFlag)
-        .limit(1).collect().isEmpty,
-        s"TxLog.mergeInto: null ${partNullCols.mkString("/")} values are not " +
-          "supported — merge them under an explicit sentinel partition instead")
-    } else {
-      import org.apache.spark.sql.functions.{concat_ws, when}
-      val viol = keyAgg.get
-        .filter(col("__graft_c") > 1 || col("__graft_pn") === 1)
-        .agg(
-          org.apache.spark.sql.functions.max(col("__graft_pn")).as("anyNull"),
-          org.apache.spark.sql.functions.min(when(col("__graft_c") > 1,
-            concat_ws(",", keys.map(k => col(k).cast("string")): _*)))
-            .as("dupKey"))
-        .head()
-      require(viol.isNullAt(0) || viol.getInt(0) == 0,
-        s"TxLog.mergeInto: null ${partNullCols.mkString("/")} values are not " +
-          "supported — merge them under an explicit sentinel partition instead")
-      require(viol.isNullAt(1),
-        s"TxLog.mergeInto: duplicate update rows for key " +
-          s"(${keys.mkString(",")})=(${if (viol.isNullAt(1)) "" else viol.getString(1)})")
-    }
-    // only the incoming side needs vetting: untouched rows passed at
-    // their own commit, and a merge never changes them
-    enforceConstraints(updatesAligned, m.constraints, "mergeInto updates")
-    // upsert shape: within-batch key uniqueness only (see
-    // addUniqueConstraint's cost-model scaladoc)
-    enforceUniques(updatesAligned, spark, path, widened, Nil, m,
-      "mergeInto updates (within-batch)")
-    warnUncoveredUniques(m, keys, "mergeInto")
-    // ---- discovery stage 1+2: stats range prune, then Bloom vote ----
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val (discoveryFiles, keyBounds, sourceEmpty) =
-      mergeCandidates(spark, path, m, widened, updatesAligned, keys)
-    // ---- discovery stage 3: exact — which files HOLD a matched key ----
-    // the validated key aggregate already holds exactly the distinct
-    // keys (cached); only the preValidated lane still pays a distinct
-    val updKeys = keyAgg.map(_.select(keys.map(col): _*))
-      .getOrElse(updatesAligned.select(keys.map(col): _*).distinct())
-    // declared merge-on-read covers the MERGE family too (Delta's
-    // enableDeletionVectors contract)
-    if (deletionVectors || dvDeclared(m)) {
-      // MERGE-ON-READ: the matched OLD rows' positions become a DV;
-      // the updates append whole. Within-batch key uniqueness still
-      // binds (two update rows for one key would BOTH land) — already
-      // vetted by the fused validation aggregate above. No DV when
-      // nothing matched: a pure insert.
-      val addDv =
-        if (discoveryFiles.isEmpty) Nil
-        else writeDv(spark, path, m,
-          padNewCols(readFiles(spark, path, m, discoveryFiles, keepDvKey = true))
-            .join(updKeys, keys, "left_semi")).toSeq
-      val newFiles = stageIn(toPhysical(updatesAligned, m.colMap), path,
-        physPartCols(m), transformsOf(m))
-      // write-time CDC: matched olds (the same deterministic semi-join
-      // that built the DV) as preimages, their update rows as
-      // postimages, the rest of the batch as inserts
-      val cdc = captureCdc(spark, path, m, {
-        val oldMatched = padNewCols(readFiles(spark, path, m, discoveryFiles))
-          .join(updKeys, keys, "left_semi")
-        val matchedKeys = oldMatched.select(keys.map(col): _*).distinct()
-        def shaped(df: DataFrame, t: String) =
-          df.select(widened.fieldNames.map(col).toIndexedSeq
-            :+ lit(t).as("_change_type"): _*)
-        shaped(oldMatched, "update_preimage")
-          .unionByName(shaped(
-            updatesAligned.join(matchedKeys, keys, "left_semi"),
-            "update_postimage"))
-          .unionByName(shaped(
-            updatesAligned.join(matchedKeys, keys, "left_anti"), "insert"))
-      })
-      return commitRebase(spark, path, m, rewriteDirs = Set.empty,
-        newFiles = newFiles, schemaDdl = widened.toDDL, batchId = None,
-        readSet = None, operation = "MERGE (DV)", addDv = addDv, txn = txn,
-        rebaseCheck = Some(mergeRebaseCheck(widened, keyBounds, sourceEmpty,
-          discoveryFiles.toSet, addDv.flatMap(_._2.keys).toSet, tz)),
-        cdc = cdc)
-    }
-    val hitFiles = discoverHitFiles(spark, path, m, discoveryFiles,
-      d => padNewCols(d).join(updKeys, keys, "left_semi"))
-    // merge = rows of the hit files with updates applied (updates win),
-    // plus inserts; staged per-partition so moved keys land right
-    val hitRows = padNewCols(readFiles(spark, path, m, hitFiles.toSeq))
-    // preValidated = true: within-batch uniqueness was vetted by the
-    // fused validation aggregate at the top of this verb
-    val merged = graft.operators.Upsert.mergeByKey(
-      hitRows, updatesAligned, keys, preValidated = true)
-    val newFiles =
-      stageIn(toPhysical(merged, m.colMap), path, physPartCols(m), transformsOf(m))
-    // the read declaration is FILE-granular (mergeRebaseCheck): an
-    // interleaved commit conflicts only when it touches what this
-    // merge read/rewrites or adds files that may hold merged keys —
-    // anything else rebases; an actual overlap still throws
-    // CommitConflictException rather than silently dropping the
-    // winner's rows (recompute and re-merge)
-    val cdc = captureCdc(spark, path, m, {
-      val oldMatched = hitRows.join(updKeys, keys, "left_semi")
-      val matchedKeys = oldMatched.select(keys.map(col): _*).distinct()
-      def shaped(df: DataFrame, t: String) =
-        df.select(widened.fieldNames.map(col).toIndexedSeq
-          :+ lit(t).as("_change_type"): _*)
-      shaped(oldMatched, "update_preimage")
-        .unionByName(shaped(
-          updatesAligned.join(matchedKeys, keys, "left_semi"),
-          "update_postimage"))
-        .unionByName(shaped(
-          updatesAligned.join(matchedKeys, keys, "left_anti"), "insert"))
-    })
-    commitRebase(spark, path, m, rewriteDirs = Set.empty,
-      newFiles = newFiles, schemaDdl = widened.toDDL, batchId = None,
-      readSet = None, operation = "MERGE", removeFiles = hitFiles, txn = txn,
-      rebaseCheck = Some(mergeRebaseCheck(widened, keyBounds, sourceEmpty,
-        discoveryFiles.toSet, hitFiles, tz)), cdc = cdc)
-    // every consumer of keyAgg (validation head, DV sidecar write, CDC
-    // capture, hit-file collects) has executed by commit time — both
-    // return paths release the cached key set through this finally
-    } finally keyAgg.foreach(_.unpersist(blocking = false))
+    mergeClauses(MergeEntry("mergeInto", "MERGE", "update"), path, m, updates,
+      keys, matched = Seq(MergeClause(None, "update", setAll(updates.columns))),
+      notMatched = Seq(MergeClause(None, "insert")), notMatchedBySource = Nil,
+      deletionVectors, txn, evolveSchema, preValidated)
   }
+
+  /** `SET c = src.c` for each column in `cols`. */
+  private def setAll(cols: Seq[String]): Seq[(String, String)] =
+    cols.map(c => c -> s"src.`${c.replace("`", "``")}`")
 
   /** One WHEN clause of [[mergeWhen]]. `condition` is a SQL boolean
     * over the TARGET row's columns plus the source row as a struct
@@ -4702,10 +4531,16 @@ object TxLog {
     *    DELETE — the "make target mirror source" sync shape.
     * Unmatched-by-any-clause rows carry unchanged.
     *
-    * Write economics follow [[mergeInto]]: without a
-    * `notMatchedBySource` clause the rewrite set is exactly the FILES
-    * holding a matched key (stats prune + Bloom vote + exact
-    * membership scan); with one, every target row must be inspected —
+    * Write economics: without a `notMatchedBySource` clause the
+    * rewrite set is exactly the FILES holding a matched key — every
+    * other file, including the rest of a hot partition, carries into
+    * the new manifest by reference and stays byte-identical on disk.
+    * Discovery runs cheapest first: a min/max SKIP-INDEX prune when
+    * the single merge key is a tracked stats column, a Bloom-sidecar
+    * vote for a bounded key set (≤1024 distinct), then one
+    * key-column-pruned semi-join scan that collects which FILES hold a
+    * matched key (a file-count-bounded driver set, never data). With a
+    * `notMatchedBySource` clause every target row must be inspected —
     * the rewrite is the whole table, Delta's cost for the same clause.
     * The commit is one protocol-2 `removeFiles` delta either way:
     * readers see the old snapshot until the single rename.
@@ -4727,7 +4562,8 @@ object TxLog {
     * files; with a NOT MATCHED BY SOURCE clause it is the difference
     * between a whole-table rewrite and a delete-sized sidecar. Same
     * DV trade as [[deleteWhere]]: per-read anti-join until OPTIMIZE
-    * materializes. */
+    * materializes. The table property `graft.deletionVectors`
+    * declares the same mode for every merge. */
   /** `evolveSchema = true` additionally admits source columns the
     * table does not have yet: the manifest's schema WIDENS in the same
     * commit ([[widen]] — additive-only, same contract as
@@ -4742,23 +4578,7 @@ object TxLog {
                 notMatchedBySource: Seq[MergeClause] = Nil,
                 deletionVectors: Boolean = false,
                 txn: Option[(String, Long)] = None,
-                evolveSchema: Boolean = false): Long =
-    // identity allocation races re-run the whole merge from the new
-    // head — the body derives everything from a fresh manifest read,
-    // so a re-run is a recompute, never a double-apply
-    retryIdentityRace("mergeWhen")(mergeWhenOnce(path, source, keys,
-      matched, notMatched, notMatchedBySource, deletionVectors, txn,
-      evolveSchema))
-
-  private def mergeWhenOnce(path: String, source: DataFrame, keys: Seq[String],
-                            matched: Seq[MergeClause],
-                            notMatched: Seq[MergeClause],
-                            notMatchedBySource: Seq[MergeClause],
-                            deletionVectors: Boolean,
-                            txn: Option[(String, Long)],
-                            evolveSchema: Boolean): Long = {
-    import org.apache.spark.sql.functions.{col, expr, lit, struct, when}
-    val spark = source.sparkSession
+                evolveSchema: Boolean = false): Long = {
     require(keys.nonEmpty, "TxLog.mergeWhen: empty key set")
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "TxLog.mergeWhen: no WHEN clauses")
@@ -4768,37 +4588,113 @@ object TxLog {
       "TxLog.mergeWhen: WHEN NOT MATCHED supports a single INSERT clause")
     require(notMatchedBySource.forall(_.action == "delete"),
       "TxLog.mergeWhen: WHEN NOT MATCHED BY SOURCE supports DELETE")
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
-    // per-app idempotency lane (see [[appendTxn]]); a merge whose
-    // clauses all no-op still SEALS the watermark ([[sealNoopTxn]]) —
-    // the table can change between delivery and redelivery, so an
-    // unsealed lane would let the replay apply effects the original
-    // did not
-    if (txn.exists { case (a, tv) => m.txns.get(a).exists(_ >= tv) }) return v
-    requireWritable(m, path)
-    // an INSERT-only merge appends — permitted under appendOnly; any
-    // matched / not-matched-by-source clause updates or deletes
-    if (matched.nonEmpty || notMatchedBySource.nonEmpty)
-      requireAppendable(m, path,
-        "mergeWhen with MATCHED / NOT MATCHED BY SOURCE clauses")
-    val declared = StructType.fromDDL(m.schemaDdl)
-    checkSchema(declared, source.schema, evolveSchema)
-    // evolution: new columns take their LOGICAL name as the physical
-    // slot — refuse collisions with renamed/dropped slots and derived
-    // hidden-partition dir names (same gates as [[append]] evolution)
-    if (evolveSchema)
-      source.schema.fieldNames.filterNot(declared.fieldNames.contains)
-        .foreach { n =>
-          require(!m.colMap.exists(_._2 == n),
-            s"TxLog.mergeWhen: new column '$n' collides with the physical " +
-              "slot of a renamed or dropped column — add it via " +
-              "TxLog.addColumn first")
-          require(!m.partitionCols.contains(n),
-            s"TxLog.mergeWhen: new column '$n' collides with a derived " +
-              "hidden partition directory name")
+    val spark = source.sparkSession
+    // identity allocation races re-run the whole merge from the new
+    // head — everything derives from a fresh manifest read, so a
+    // re-run is a recompute, never a double-apply
+    retryIdentityRace("mergeWhen") {
+      val v = currentVersion(spark, path).getOrElse(
+        throw new IllegalArgumentException(s"TxLog: no table at $path"))
+      val m = manifest(spark, path, v)
+      // per-app idempotency lane (see [[appendTxn]]); a merge whose
+      // clauses all no-op still SEALS the watermark ([[sealNoopTxn]])
+      // — the table can change between delivery and redelivery, so an
+      // unsealed lane would let the replay apply effects the original
+      // did not
+      if (txn.exists { case (a, tv) => m.txns.get(a).exists(_ >= tv) }) v
+      else {
+        requireWritable(m, path)
+        // an INSERT-only merge appends — permitted under appendOnly;
+        // any matched / not-matched-by-source clause updates or deletes
+        if (matched.nonEmpty || notMatchedBySource.nonEmpty)
+          requireAppendable(m, path,
+            "mergeWhen with MATCHED / NOT MATCHED BY SOURCE clauses")
+        val declared = StructType.fromDDL(m.schemaDdl)
+        checkSchema(declared, source.schema, evolveSchema)
+        // evolution: new columns take their LOGICAL name as the
+        // physical slot — refuse collisions with renamed/dropped slots
+        // and derived hidden-partition dir names (same gates as
+        // [[append]] evolution)
+        if (evolveSchema)
+          source.schema.fieldNames.filterNot(declared.fieldNames.contains)
+            .foreach { n =>
+              require(!m.colMap.exists(_._2 == n),
+                s"TxLog.mergeWhen: new column '$n' collides with the physical " +
+                  "slot of a renamed or dropped column — add it via " +
+                  "TxLog.addColumn first")
+              require(!m.partitionCols.contains(n),
+                s"TxLog.mergeWhen: new column '$n' collides with a derived " +
+                  "hidden partition directory name")
+            }
+        val widened = if (evolveSchema) widen(declared, source.schema) else declared
+        keys.foreach(k => require(declared.fieldNames.contains(k) &&
+          source.columns.contains(k),
+          s"TxLog.mergeWhen: key '$k' must exist on both sides"))
+        // IDENTITY columns are engine-assigned end to end: the source
+        // may not carry them (GENERATED ALWAYS), SET may not assign them
+        // (the gate below), and INSERT * fills them from the high-water
+        // mark
+        identityColumns(m).keySet.foreach(c =>
+          require(!source.columns.contains(c),
+            s"TxLog.mergeWhen: column '$c' is GENERATED ALWAYS AS IDENTITY " +
+              "— the source may not carry it (merge on a natural key)"))
+        if (notMatched.nonEmpty) {
+          val policyCols = columnDefaults(m).keySet ++
+            generatedColumns(m).keySet ++ identityColumns(m).keySet
+          widened.fields.foreach(f => require(
+            source.columns.contains(f.name) || policyCols.contains(f.name),
+            s"TxLog.mergeWhen: INSERT * needs source column '${f.name}' " +
+              "(only DEFAULT/GENERATED/IDENTITY columns may be omitted)"))
         }
+        // assigning a layout column would silently leave the row in its
+        // old directory — refuse, as updateWhere's relocation contract
+        // doesn't compose with conditional clauses
+        val layoutCols = mergeLayoutCols(m).toSet
+        matched.flatMap(_.sets).foreach { case (c, _) =>
+          require(widened.fieldNames.contains(c),
+            s"TxLog.mergeWhen: SET names unknown column '$c'")
+          require(!layoutCols.contains(c),
+            s"TxLog.mergeWhen: SET may not assign layout column '$c'")
+          require(!identityColumns(m).contains(c),
+            s"TxLog.mergeWhen: SET may not assign IDENTITY column '$c'")
+        }
+        mergeClauses(MergeEntry("mergeWhen", "MERGE WHEN", "source"), path, m,
+          source, keys, matched, notMatched, notMatchedBySource,
+          deletionVectors, txn, evolveSchema, preValidated = false)
+      }
+    }
+  }
+
+  /** The columns a row's directory derives from: the partition columns,
+    * or a hidden layout's transform sources. */
+  private def mergeLayoutCols(m: Manifest): Seq[String] =
+    if (m.partitionSpec.isEmpty) m.partitionCols else transformsOf(m).map(_.src)
+
+  /** One public entry of the keyed MERGE engine: `verb` names it in
+    * refusals and warnings, `operation` in the commit, `rows` the
+    * batch's rows in the duplicate-key refusal. */
+  private final case class MergeEntry(verb: String, operation: String, rows: String)
+
+  /** The keyed MERGE engine behind [[mergeWhen]], [[mergeInto]] and
+    * [[applyChanges]]. It trusts its caller: schema, clause shapes and
+    * SET targets were vetted by the public entry, so a caller's own
+    * clause set may assign layout columns (a whole-row update moves
+    * its key) and the source may carry columns only conditions read
+    * (`src._change_type`) — INSERT * and SET write table columns only.
+    * `preValidated` skips the duplicate-key probe. */
+  private def mergeClauses(entry: MergeEntry, path: String, m: Manifest,
+                           source: DataFrame, keys: Seq[String],
+                           matched: Seq[MergeClause],
+                           notMatched: Seq[MergeClause],
+                           notMatchedBySource: Seq[MergeClause],
+                           deletionVectors: Boolean,
+                           txn: Option[(String, Long)],
+                           evolveSchema: Boolean,
+                           preValidated: Boolean): Long = {
+    import org.apache.spark.sql.functions.{col, concat_ws, count, expr, lit, max,
+      min, struct, when}
+    val spark = source.sparkSession
+    val declared = StructType.fromDDL(m.schemaDdl)
     val widened = if (evolveSchema) widen(declared, source.schema) else declared
     // target rows read with their OWN schema; evolution pads the new
     // columns with typed nulls so both sides join/union in widened shape
@@ -4818,49 +4714,77 @@ object TxLog {
           readSet = Some(Set.empty), operation = s"$op (WIDEN)", txn = txn)
       else sealNoopTxn(spark, path, m, txn, op)
     require(!widened.fieldNames.contains("src"),
-      "TxLog.mergeWhen: the table has a column literally named 'src' — " +
+      s"TxLog.${entry.verb}: the table has a column literally named 'src' — " +
         "the clause namespace reserves it for the source-row struct")
-    keys.foreach(k => require(declared.fieldNames.contains(k) &&
-      source.columns.contains(k),
-      s"TxLog.mergeWhen: key '$k' must exist on both sides"))
-    // IDENTITY columns are engine-assigned end to end: the source may
-    // not carry them (GENERATED ALWAYS), SET may not assign them (the
-    // gate below), and INSERT * fills them from the high-water mark
-    identityColumns(m).keySet.foreach(c =>
-      require(!source.columns.contains(c),
-        s"TxLog.mergeWhen: column '$c' is GENERATED ALWAYS AS IDENTITY " +
-          "— the source may not carry it (merge on a natural key)"))
-    if (notMatched.nonEmpty) {
-      val policyCols = columnDefaults(m).keySet ++
-        generatedColumns(m).keySet ++ identityColumns(m).keySet
-      widened.fields.foreach(f => require(
-        source.columns.contains(f.name) || policyCols.contains(f.name),
-        s"TxLog.mergeWhen: INSERT * needs source column '${f.name}' " +
-          "(only DEFAULT/GENERATED/IDENTITY columns may be omitted)"))
+    def clauseCond(c: MergeClause): org.apache.spark.sql.Column =
+      c.condition.map(expr).getOrElse(lit(true))
+    val srcStruct = struct(source.columns.map(col).toIndexedSeq: _*)
+    // batch validation in ONE key-grouped aggregate: a key with more
+    // than one source row has no well-defined winning clause, and a
+    // row that would write a NULL layout value lands under
+    // __HIVE_DEFAULT_PARTITION__, outside the layout contract. The
+    // layout flag is 2 where a layout-assigning SET (the whole-row
+    // updates of mergeInto/applyChanges) would write the null and 1
+    // where only INSERT * would (omitted DEFAULT/GENERATED layout
+    // columns filled first) — a matched row does not insert, so a 1 is
+    // confirmed against the table before it refuses. The persisted
+    // aggregate is also the distinct key set discovery semi-joins
+    // against, so the batch shuffles by key once per merge.
+    val layoutCols = mergeLayoutCols(m)
+    val filledSrc = (if (notMatched.isEmpty) source
+      else fillPolicyColumns(source, m, widened)).withColumn("src", srcStruct)
+    val insertNull = notMatched.map(c => clauseCond(c) && layoutCols
+      .filter(filledSrc.columns.contains).map(col(_).isNull).foldLeft(lit(false))(_ || _))
+    val setNull = matched.flatMap(c => c.sets.collect {
+      case (t, e) if layoutCols.contains(t) => clauseCond(c) && expr(e).isNull })
+    val layoutFlag = when(setNull.foldLeft(lit(false))(_ || _), 2)
+      .when(insertNull.foldLeft(lit(false))(_ || _), 1).otherwise(0)
+      .as("__graft_pn")
+    val flagged = filledSrc.select(keys.map(col) :+ layoutFlag: _*)
+    val keyAgg: Option[DataFrame] =
+      if (preValidated) None
+      else Some(flagged.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__graft_c"), max(col("__graft_pn")).as("__graft_pn"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // the merge key's stats bounds (discovery's range prune and the
+    // commit's read declaration) ride the same aggregate
+    val boundCols = keyBoundCols(m, declared, keys)
+    try {
+    val probe: Option[org.apache.spark.sql.Row] =
+      if (keyAgg.isEmpty && setNull.isEmpty && insertNull.isEmpty && boundCols.isEmpty) None
+      else Some(keyAgg.getOrElse(flagged.withColumn("__graft_c", lit(1L)))
+        .agg(max(col("__graft_pn")), min(when(col("__graft_c") > 1,
+          concat_ws(",", keys.map(k => col(k).cast("string")): _*))) +:
+          boundCols.toSeq.flatten: _*)
+        .head())
+    probe.foreach { viol =>
+      val layoutNull = !viol.isNullAt(0) && (viol.getInt(0) == 2 ||
+        viol.getInt(0) == 1 && !flagged.filter(col("__graft_pn") === 1)
+          .select(keys.map(col): _*)
+          .join(readFiles(spark, path, m, m.files).select(keys.map(col): _*),
+            keys, "left_anti").isEmpty)
+      require(!layoutNull,
+        s"TxLog.${entry.verb}: null ${layoutCols.mkString("/")} values are not " +
+          "supported — merge them under an explicit sentinel partition instead")
+      require(viol.isNullAt(1),
+        s"TxLog.${entry.verb}: duplicate ${entry.rows} rows for key " +
+          s"(${keys.mkString(",")})=(${if (viol.isNullAt(1)) "" else viol.getString(1)})")
     }
-    // assigning a layout column would silently leave the row in its
-    // old directory — refuse, as updateWhere's relocation contract
-    // doesn't compose with the clause engine
-    val layoutCols = (if (m.partitionSpec.isEmpty) m.partitionCols
-                      else transformsOf(m).map(_.src)).toSet
-    matched.flatMap(_.sets).foreach { case (c, _) =>
-      require(widened.fieldNames.contains(c),
-        s"TxLog.mergeWhen: SET names unknown column '$c'")
-      require(!layoutCols.contains(c),
-        s"TxLog.mergeWhen: SET may not assign layout column '$c'")
-      require(!identityColumns(m).contains(c),
-        s"TxLog.mergeWhen: SET may not assign IDENTITY column '$c'")
-    }
-    // ambiguous-winner guard: one source row per key
-    val dup = graft.operators.Upsert.pkViolations(source, keys)
-      .limit(1).collect()
-    require(dup.isEmpty,
-      s"TxLog.mergeWhen: duplicate source rows for key (${keys.mkString(",")})")
-    warnUncoveredUniques(m, keys, "mergeWhen")
-    // ---- discovery: stats range prune, then Bloom vote ----
+    warnUncoveredUniques(m, keys, entry.verb)
+    // ---- discovery: the files that may hold a source key — stats
+    // range prune against the key bounds, then the Bloom vote over a
+    // bounded key set. The bounds are also the commit's READ
+    // declaration: [[mergeRebaseCheck]] votes concurrently-added files
+    // against them, so disjoint-key concurrent merges rebase
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val (discoveryFiles, keyBounds, sourceEmpty) =
-      mergeCandidates(spark, path, m, declared, source, keys)
+    val bounds = boundCols.map(_ => boundsAt(keys, probe.get, 2))
+    val sourceEmpty = bounds.contains(None) // no key at all: nothing matches
+    val keyBounds = bounds.flatten
+    val discoveryFiles: Seq[String] = keyBounds match {
+      case None => if (sourceEmpty) Nil else m.files
+      case Some((k, lo, hi)) => bloomPruneByKeys(spark, path, physOf(m, k),
+        boundedDistinct(source, k, 1024), pruneByRange(m, declared, m.files, k, lo, hi, tz))
+    }
     // a NOT MATCHED BY SOURCE clause makes EVERY target row (including
     // rows of concurrently-added files) load-bearing: the read
     // declaration widens to the whole table and nothing added/changed
@@ -4873,11 +4797,9 @@ object TxLog {
       else
         mergeRebaseCheck(widened, None, sourceEmpty = false,
           m.files.toSet, touched, tz)
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    val srcStructed = source.select(
-      keys.map(col) :+ struct(source.columns.map(col): _*).as("src"): _*)
-    def clauseCond(c: MergeClause): org.apache.spark.sql.Column =
-      c.condition.map(expr).getOrElse(lit(true))
+    val srcKeys = keyAgg.map(_.select(keys.map(col): _*))
+      .getOrElse(source.select(keys.map(col): _*).distinct())
+    val srcStructed = source.select(keys.map(col) :+ srcStruct.as("src"): _*)
     // disposition: first-true clause index; -1 = carry unchanged.
     // matched and not-matched-by-source branches are disjoint on
     // src's nullness, so one chain serves both
@@ -4899,16 +4821,14 @@ object TxLog {
           when(col("_act") === i, expr(setExpr)).otherwise(rest)
         }.cast(f.dataType).as(f.name)
       }.toSeq: _*)
-    // the insert decision anti-joins the DISCOVERY scan, not the
-    // rewrite scope: an insert-only merge rewrites nothing, but a
-    // source row whose key exists in the table must still not insert
-    val insertsAndClaims: Option[(DataFrame, Map[String, (Long, Long)])] =
-      notMatched.headOption.map { c =>
-        val existingKeys = readFiles(spark, path, m, discoveryFiles)
-          .select(keys.map(col): _*).distinct()
-        val landed = source
-          .withColumn("src", struct(source.columns.map(col): _*))
-          .join(existingKeys, keys.toSeq, "left_anti")
+    // INSERT * lands the source rows whose key `existing` (the target
+    // keys of a scan covering every file that can hold a source key)
+    // lacks; None = no target file can hold one
+    def insertsGiven(existing: Option[DataFrame])
+        : (Option[DataFrame], Map[String, (Long, Long)]) =
+      notMatched.headOption.fold((Option.empty[DataFrame], Map.empty[String, (Long, Long)])) { c =>
+        val withSrc = source.withColumn("src", srcStruct)
+        val landed = existing.fold(withSrc)(withSrc.join(_, keys, "left_anti"))
           .filter(clauseCond(c))
           .select(source.columns.map(col).toIndexedSeq: _*)
         // INSERT * is insert-shaped: omitted DEFAULT columns fill,
@@ -4916,89 +4836,80 @@ object TxLog {
         // columns allocate — same as the append family; the claims
         // ride this merge's commit
         val (filled, claims) = fillIdentityColumns(
-          fillPolicyColumns(landed, m, widened), m, "mergeWhen")
-        (filled.select(widened.fieldNames.map(col).toSeq: _*), claims)
+          fillPolicyColumns(landed, m, widened), m, entry.verb)
+        (Some(filled.select(widened.fieldNames.map(col).toSeq: _*)), claims)
       }
-    val inserts: Option[DataFrame] = insertsAndClaims.map(_._1)
-    val idClaims: Map[String, (Long, Long)] =
-      insertsAndClaims.map(_._2).getOrElse(Map.empty)
-    val partNullCols =
-      if (m.partitionSpec.isEmpty) m.partitionCols
-      else transformsOf(m).map(_.src)
     def vetWritten(written: DataFrame, op: String): Unit = {
       enforceConstraints(written, m.constraints, op)
-      // mirror mergeInto's UNIQUE cost model: within-batch only over
-      // what this commit writes (an INSERT or a SET on a unique column
-      // could otherwise silently duplicate); collisions against
-      // UNTOUCHED files are the uncovered-keys trade flagged loudly by
-      // warnUncoveredUniques above
+      // UNIQUE cost model: within-batch only over what this commit
+      // writes (an INSERT or a SET on a unique column could otherwise
+      // silently duplicate); collisions against UNTOUCHED files are
+      // the uncovered-keys trade flagged loudly by warnUncoveredUniques
       enforceUniques(written, spark, path, widened, Nil, m,
         s"$op written rows (within-batch)")
-      if (partNullCols.nonEmpty)
-        require(written.filter(partNullCols.map(col(_).isNull).reduce(_ || _))
-          .limit(1).collect().isEmpty,
-          s"TxLog.$op: null ${partNullCols.mkString("/")} values are " +
-            "not supported — merge them under an explicit sentinel instead")
+    }
+    def acting(rows: Option[DataFrame], idx: Seq[Int]): Option[DataFrame] =
+      rows.filter(_ => idx.nonEmpty).map(_.filter(col("_act").isInCollection(idx)))
+    // write-time CDC: deleted target rows carry the old row, updates
+    // exact pre/postimages, inserts the filled rows
+    def changeRecord(rows: Option[DataFrame], inserts: Option[DataFrame]): DataFrame = {
+      def shaped(df: DataFrame, t: String): DataFrame =
+        df.select(widened.fieldNames.map(col).toIndexedSeq
+          :+ lit(t).as("_change_type"): _*)
+      (acting(rows, deletes).map(shaped(_, "delete")).toSeq ++
+        acting(rows, updateIdx).toSeq.flatMap(u => Seq(shaped(u, "update_preimage"),
+          shaped(applyUpdates(u), "update_postimage"))) ++
+        inserts.map(shaped(_, "insert"))).reduce(_ unionByName _)
     }
     if (deletionVectors || dvDeclared(m)) {
       // MERGE-ON-READ: one scan of the scope materializes every
       // ACTIONED row with its position (the updateWhere(dv) pattern);
       // the DV and the updated images both derive from that single
       // materialization — no file rewrites at all
+      val op = s"${entry.operation} (DV)"
       val scanFiles: Seq[String] =
         if (notMatchedBySource.nonEmpty) m.files else discoveryFiles
-      if (scanFiles.isEmpty && inserts.isEmpty)
-        return sealOrWiden("MERGE WHEN (DV)")
+      if (scanFiles.isEmpty && notMatched.isEmpty) return sealOrWiden(op)
       val tmp = new Path(path,
         s"_tmp_update_${java.util.UUID.randomUUID().toString.take(12)}")
       val fsx = fsFor(spark, path)
       try {
-        if (scanFiles.nonEmpty)
-          padNewCols(readFiles(spark, path, m, scanFiles, keepDvKey = true))
-            .join(srcStructed, keys.toSeq, "left_outer")
-            .withColumn("_act", actCol)
-            .filter(col("_act") =!= -1)
-            .write.parquet(tmp.toString)
-        val actioned: Option[DataFrame] =
+        // the scratch set holds the actioned rows plus every other
+        // matched row: the matched keys are what INSERT * anti-joins,
+        // so the insert decision reads no second scan of the target
+        val scanned: Option[DataFrame] =
           if (scanFiles.isEmpty) None
-          else Some(spark.read.parquet(tmp.toString))
-        val images: Option[DataFrame] =
-          if (updateIdx.isEmpty) None
-          else actioned.map(a =>
-            applyUpdates(a.filter(col("_act").isInCollection(updateIdx))))
-        val written: Option[DataFrame] = (images.toSeq ++ inserts.toSeq)
-          .reduceOption(_ unionByName _)
-        written.foreach(vetWritten(_, "mergeWhen(dv)"))
+          else {
+            val rows = padNewCols(readFiles(spark, path, m, scanFiles, keepDvKey = true))
+              .join(srcStructed, keys, "left_outer")
+              .withColumn("_act", actCol)
+              .filter(col("_act") =!= -1 || col("src").isNotNull)
+            rows.write.parquet(tmp.toString)
+            // read back with the schema just written: no inference job
+            Some(spark.read.schema(rows.schema).parquet(tmp.toString))
+          }
+        val actioned = scanned.map(_.filter(col("_act") =!= -1))
+        val (inserts, idClaims) = insertsGiven(scanned.map(
+          _.filter(col("src").isNotNull).select(keys.map(col): _*)))
+        val written: Option[DataFrame] = (acting(actioned, updateIdx).map(applyUpdates)
+          .toSeq ++ inserts.toSeq).reduceOption(_ unionByName _)
+        written.foreach(vetWritten(_, s"${entry.verb}(dv)"))
+        // no sidecar when nothing was actioned: writeDv counts what it
+        // wrote, so an empty actioned set costs no extra probe
         val addDv: Seq[(String, Map[String, Long])] =
-          if (actioned.forall(_.isEmpty)) Nil
-          else writeDv(spark, path, m, actioned.get).toSeq
+          actioned.flatMap(writeDv(spark, path, m, _)).toSeq
         val staged = written.map(w => stageIn(toPhysical(w, m.colMap), path,
           physPartCols(m), transformsOf(m))).getOrElse(Nil)
         if (addDv.isEmpty && staged.isEmpty) // nothing matched any clause
-          return sealOrWiden("MERGE WHEN (DV)")
-        // write-time CDC from the ONE materialized actioned set:
-        // deletes carry the old row, updates exact pre/postimages,
-        // inserts the filled rows
-        val cdc = captureCdc(spark, path, m, {
-          def shaped(df: DataFrame, t: String) =
-            df.select(widened.fieldNames.map(col).toIndexedSeq
-              :+ lit(t).as("_change_type"): _*)
-          val parts =
-            actioned.filter(_ => deletes.nonEmpty).map(a =>
-              shaped(a.filter(col("_act").isInCollection(deletes)), "delete")).toSeq ++
-            actioned.filter(_ => updateIdx.nonEmpty).map(a =>
-              shaped(a.filter(col("_act").isInCollection(updateIdx)),
-                "update_preimage")).toSeq ++
-            images.map(shaped(_, "update_postimage")).toSeq ++
-            inserts.map(shaped(_, "insert")).toSeq
-          parts.reduce(_ unionByName _)
-        })
+          return sealOrWiden(op)
+        // CDC from the ONE materialized actioned set
         return commitRebase(spark, path, m, rewriteDirs = Set.empty,
           newFiles = staged, schemaDdl = widened.toDDL, batchId = None,
-          readSet = None, operation = "MERGE WHEN (DV)", addDv = addDv,
+          readSet = None, operation = op, addDv = addDv,
           txn = txn, rebaseCheck = Some(whenRebaseCheck(scanFiles.toSet,
-            addDv.flatMap(_._2.keys).toSet)), idClaims = idClaims,
-          cdc = cdc)
+            addDv.flatMap(_._2.keys).toSet)),
+          idClaims = idClaims,
+          cdc = captureCdc(spark, path, m, changeRecord(actioned, inserts)))
       } finally fsx.delete(tmp, true)
     }
     val hitFiles: Set[String] =
@@ -5007,41 +4918,40 @@ object TxLog {
         _.join(srcKeys, keys, "left_semi"))
     val scopeFiles: Set[String] =
       if (notMatchedBySource.nonEmpty) m.files.toSet else hitFiles
+    if (scopeFiles.isEmpty && notMatched.isEmpty)
+      return sealOrWiden(entry.operation)
     val scopeRows = padNewCols(readFiles(spark, path, m, scopeFiles.toSeq))
-    val acted = scopeRows.join(srcStructed, keys.toSeq, "left_outer")
+    val acted = scopeRows.join(srcStructed, keys, "left_outer")
       .withColumn("_act", actCol)
-    val rewritten = applyUpdates(
-      if (deletes.isEmpty) acted
-      else acted.filter(!col("_act").isInCollection(deletes)))
-    if (scopeFiles.isEmpty && inserts.isEmpty)
-      return sealOrWiden("MERGE WHEN")
+    val rewritten = applyUpdates(acted.filter(!col("_act").isInCollection(deletes)))
+    // the scope covers every file holding a source key unless the merge
+    // is insert-only; that one anti-joins the discovery scan instead
+    // (it rewrites nothing, but an existing key must still not insert)
+    val (inserts, idClaims) = insertsGiven(Some(readFiles(spark, path, m,
+      if (matched.isEmpty && notMatchedBySource.isEmpty) discoveryFiles
+      else scopeFiles.toSeq).select(keys.map(col): _*)))
     val written = inserts.fold(rewritten)(rewritten.unionByName(_))
-    vetWritten(written, "mergeWhen")
+    vetWritten(written, entry.verb)
     val newFiles = stageIn(toPhysical(written, m.colMap), path,
       physPartCols(m), transformsOf(m))
-    val cdc = captureCdc(spark, path, m, {
-      def shaped(df: DataFrame, t: String) =
-        df.select(widened.fieldNames.map(col).toIndexedSeq
-          :+ lit(t).as("_change_type"): _*)
-      val parts =
-        (if (deletes.isEmpty) Nil
-         else Seq(shaped(acted.filter(col("_act").isInCollection(deletes)),
-           "delete"))) ++
-        (if (updateIdx.isEmpty) Nil
-         else {
-           val upd = acted.filter(col("_act").isInCollection(updateIdx))
-           Seq(shaped(upd, "update_preimage"),
-             shaped(applyUpdates(upd), "update_postimage"))
-         }) ++
-        inserts.map(shaped(_, "insert")).toSeq
-      parts.reduce(_ unionByName _)
-    })
+    if (newFiles.isEmpty && scopeFiles.isEmpty) // nothing matched any clause
+      return sealOrWiden(entry.operation)
+    // the read declaration is FILE-granular (mergeRebaseCheck): an
+    // interleaved commit conflicts only when it touches what this
+    // merge read/rewrites or adds files that may hold merged keys —
+    // anything else rebases; an actual overlap still throws
+    // CommitConflictException rather than silently dropping the
+    // winner's rows (recompute and re-merge)
     commitRebase(spark, path, m, rewriteDirs = Set.empty,
       newFiles = newFiles, schemaDdl = widened.toDDL, batchId = None,
-      readSet = None, operation = "MERGE WHEN", removeFiles = scopeFiles,
+      readSet = None, operation = entry.operation, removeFiles = scopeFiles,
       txn = txn, rebaseCheck = Some(whenRebaseCheck(
         discoveryFiles.toSet ++ scopeFiles, scopeFiles)),
-      idClaims = idClaims, cdc = cdc)
+      idClaims = idClaims, cdc = captureCdc(spark, path, m, changeRecord(Some(acted), inserts)))
+    // every consumer of keyAgg (validation, discovery, the DV sidecar
+    // write, CDC capture) has executed by commit time — each return
+    // path releases the cached key set through this finally
+    } finally keyAgg.foreach(_.unpersist(blocking = false))
   }
 
   /** Up to `limit` distinct values of `colName` in `df`, or Nil when
@@ -5083,43 +4993,25 @@ object TxLog {
     }
   }
 
-  /** `df`'s key bounds in the STATS encoding (timestamps as us:-micros,
-    * so a prune compares exactly what collectStats wrote) when `keys`
-    * is one stats-tracked column — one aggregate job. None = no bounds
-    * to vote with (no job runs); Some(None) = `df` holds no non-null
-    * key; otherwise (key, min, max). */
-  private def keyStatsBounds(df: DataFrame, m: Manifest, schema: StructType,
-                             keys: Seq[String])
-      : Option[Option[(String, String, String)]] =
+  /** The stats-encoded (min, max) aggregate of `keys` when they are
+    * one stats-tracked column (timestamps as us:-micros, so a prune
+    * compares exactly what collectStats wrote); None = no bounds to
+    * vote with (one aggregate job when evaluated). [[boundsAt]] reads
+    * the result back. */
+  private def keyBoundCols(m: Manifest, schema: StructType, keys: Seq[String])
+      : Option[Seq[org.apache.spark.sql.Column]] =
     if (keys.size != 1 || !m.statsCols.contains(physOf(m, keys.head))) None
     else {
       import org.apache.spark.sql.functions.{col, max, min}
-      val k = keys.head
-      val b = df.agg(statsEncode(schema(k).dataType, min(col(k))),
-        statsEncode(schema(k).dataType, max(col(k)))).head()
-      Some(if (b.isNullAt(0)) None else Some((k, b.getString(0), b.getString(1))))
+      val t = schema(keys.head).dataType
+      Some(Seq(statsEncode(t, min(col(keys.head))), statsEncode(t, max(col(keys.head)))))
     }
 
-  /** Merge discovery stages 1+2: the files that may hold one of
-    * `source`'s keys — stats range prune against the source's key
-    * bounds, then the Bloom vote over a bounded key set. Returns the
-    * candidates, the key bounds (the commit's READ declaration:
-    * [[mergeRebaseCheck]] votes concurrently-added files against them,
-    * so disjoint-key concurrent merges rebase instead of conflicting)
-    * and whether the source holds no key at all. */
-  private def mergeCandidates(spark: SparkSession, path: String, m: Manifest,
-                              schema: StructType, source: DataFrame,
-                              keys: Seq[String])
-      : (Seq[String], Option[(String, String, String)], Boolean) =
-    keyStatsBounds(source, m, schema, keys) match {
-      case None => (m.files, None, false)
-      case Some(None) => (Nil, None, true) // empty batch: nothing matches
-      case Some(bounds @ Some((k, lo, hi))) =>
-        val byStats = pruneByRange(m, schema, m.files, k, lo, hi,
-          spark.sessionState.conf.sessionLocalTimeZone)
-        (bloomPruneByKeys(spark, path, physOf(m, k),
-          boundedDistinct(source, k, 1024), byStats), bounds, false)
-    }
+  /** (key, min, max) from [[keyBoundCols]]' values at `r(i)`, `r(i+1)`;
+    * None when the aggregated frame held no non-null key. */
+  private def boundsAt(keys: Seq[String], r: org.apache.spark.sql.Row, i: Int)
+      : Option[(String, String, String)] =
+    if (r.isNullAt(i)) None else Some((keys.head, r.getString(i), r.getString(i + 1)))
 
   /** INSERT OVERWRITE of whole partitions as ONE commit — Delta's
     * `replaceWhere` at partition granularity, the daily re-load
@@ -5449,6 +5341,13 @@ object TxLog {
           case None => col(f.name)
         }
       }.toIndexedSeq: _*)
+    // write-time CDC: exact pre/postimages of the matched rows
+    def updateRecord(pre: DataFrame) = captureCdc(spark, path, m, {
+      val cols = schema.fieldNames.map(col).toIndexedSeq
+      pre.select(cols :+ lit("update_preimage").as("_change_type"): _*)
+        .unionByName(assigned(pre, everyRowMatched = true)
+          .select(cols :+ lit("update_postimage").as("_change_type"): _*))
+    })
     if (deletionVectors || dvDeclared(m)) {
       // ONE materialization of the matched rows (keys + values): the
       // DV sidecar and the appended images must describe the SAME set
@@ -5456,35 +5355,27 @@ object TxLog {
         s"_tmp_update_${java.util.UUID.randomUUID().toString.take(12)}")
       val fs = fsFor(spark, path)
       try {
-        readFiles(spark, path, m, m.files, keepDvKey = true)
-          .filter(hit).write.parquet(tmp.toString)
-        val matched = spark.read.parquet(tmp.toString)
-        if (matched.isEmpty) return v
-        val images = assigned(
-          matched.select(schema.fieldNames.map(col).toIndexedSeq: _*),
-          everyRowMatched = true)
+        val hitRows = readFiles(spark, path, m, m.files, keepDvKey = true).filter(hit)
+        hitRows.write.parquet(tmp.toString)
+        // read back with the schema just written: no inference job
+        val matched = spark.read.schema(hitRows.schema).parquet(tmp.toString)
+        val images = assigned(matched, everyRowMatched = true)
         enforceConstraints(images, m.constraints, "updateWhere")
-        // `matched` is non-empty, so a sidecar is always written
-        val (dvName, counts) = writeDv(spark, path, m, matched).get
+        // no sidecar = nothing matched: writeDv counts what it wrote
+        val (dvName, counts) = writeDv(spark, path, m, matched).getOrElse(return v)
         val staged = stageIn(toPhysical(images, m.colMap), path,
           physPartCols(m), transformsOf(m))
         // same read declaration as DELETE (DV): the update serializes
         // before any BLIND append; the DV targets are load-bearing and
-        // non-blind adds conflict ([[predicateRebaseCheck]])
-        val dvTargets = counts.keySet
-        // write-time CDC from the ONE materialized matched set: exact
-        // pre/postimages, no key join, no condition re-evaluation
-        val cdc = captureCdc(spark, path, m,
-          matched.select(schema.fieldNames.map(col).toIndexedSeq
-              :+ lit("update_preimage").as("_change_type"): _*)
-            .unionByName(images.select(schema.fieldNames.map(col).toIndexedSeq
-              :+ lit("update_postimage").as("_change_type"): _*)))
+        // non-blind adds conflict ([[predicateRebaseCheck]]). The CDC
+        // record derives from the ONE materialized matched set: no key
+        // join, no condition re-evaluation
         commitRebase(spark, path, m, rewriteDirs = Set.empty,
           newFiles = staged, schemaDdl = m.schemaDdl, batchId = None,
           readSet = None, operation = "UPDATE (DV)",
           addDv = Seq(dvName -> counts),
           rebaseCheck = Some(predicateRebaseCheck(spark, path, schema,
-            dvTargets, "UTC")), cdc = cdc)
+            counts.keySet, "UTC")), cdc = updateRecord(matched))
       } finally fs.delete(tmp, true)
     } else {
       val hitFiles = discoverHitFiles(spark, path, m, m.files, _.filter(hit))
@@ -5498,18 +5389,11 @@ object TxLog {
       // file-granular read declaration, identical to DELETE's: blind
       // appends serialize after the update, hit files and non-blind
       // adds conflict ([[predicateRebaseCheck]])
-      val matchedPre = snap.filter(hit)
-      val cdc = captureCdc(spark, path, m,
-        matchedPre.select(schema.fieldNames.map(col).toIndexedSeq
-            :+ lit("update_preimage").as("_change_type"): _*)
-          .unionByName(assigned(matchedPre, everyRowMatched = true)
-            .select(schema.fieldNames.map(col).toIndexedSeq
-              :+ lit("update_postimage").as("_change_type"): _*)))
       commitRebase(spark, path, m, rewriteDirs = Set.empty,
         newFiles = newFiles, schemaDdl = m.schemaDdl, batchId = None,
         readSet = None, operation = "UPDATE", removeFiles = hitFiles,
         rebaseCheck = Some(predicateRebaseCheck(spark, path, schema,
-          hitFiles, "UTC")), cdc = cdc)
+          hitFiles, "UTC")), cdc = updateRecord(snap.filter(hit)))
     }
   }
 
@@ -6023,9 +5907,15 @@ object TxLog {
     * the consumer side of CDC: a replica ingests the row-level diff
     * instead of re-reading the source. Inserts/updates merge (updates
     * win on key collision), deletes drop their keys, and the whole
-    * feed lands as ONE atomic version with [[mergeInto]]'s economics:
-    * only partitions holding a changed or deleted key (old OR new
-    * location) rewrite; everything else carries by reference.
+    * feed lands as ONE atomic version with [[mergeWhen]]'s economics:
+    * only files holding a changed or deleted key (old OR new location)
+    * rewrite; everything else carries by reference. The clause set
+    * over the engine: `WHEN MATCHED AND src._change_type = 'delete'
+    * THEN DELETE`, `WHEN MATCHED AND src._change_type IN ('insert',
+    * 'update') THEN UPDATE SET c = src.c` for every table column, and
+    * `WHEN NOT MATCHED AND src._change_type IN ('insert', 'update')
+    * THEN INSERT *` — `_change_type` is visible to the conditions only,
+    * and a delete of an absent key is no event.
     *
     * The feed must carry one row per key (what [[changes]] emits —
     * guarded by the same bounded eager probe as the merge operators;
@@ -6035,13 +5925,13 @@ object TxLog {
   def applyChanges(path: String, feed: DataFrame, keys: Seq[String],
                    preValidated: Boolean = false,
                    txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
     val spark = feed.sparkSession
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
     val m = manifest(spark, path, v)
     // per-app idempotency lane: a replayed feed window skips whole
     if (txn.exists { case (a, tv) => m.txns.get(a).exists(_ >= tv) }) return v
+    requireWritable(m, path)
     requireAppendable(m, path,
       "applyChanges (a CDC feed updates and deletes rows)")
     require(identityColumns(m).isEmpty,
@@ -6049,72 +5939,20 @@ object TxLog {
         s"${identityColumns(m).keys.mkString(", ")} — a CDC feed carries " +
         "explicit id values; a REPLICA of an identity table should not " +
         "re-declare IDENTITY (the source already allocated)")
-    val pcs = m.partitionCols
-    require(pcs.nonEmpty,
+    require(m.partitionCols.nonEmpty,
       "TxLog.applyChanges needs a partitioned table (create with partitionCol[s])")
     val declared = StructType.fromDDL(m.schemaDdl)
     require(feed.columns.contains("_change_type"),
       "TxLog.applyChanges: feed must carry _change_type (see TxLog.changes)")
     declared.fieldNames.foreach(c => require(feed.columns.contains(c),
       s"TxLog.applyChanges: feed is missing table column '$c'"))
-    if (!preValidated) {
-      val dup = graft.operators.Upsert.pkViolations(feed, keys).limit(1).collect()
-      require(dup.isEmpty,
-        s"TxLog.applyChanges: duplicate feed rows for key (${keys.mkString(",")})")
-    }
-    val upserts = feed.filter(col("_change_type").isin("insert", "update"))
-      .select(declared.fieldNames.map(col): _*)
-    enforceConstraints(upserts, m.constraints, "applyChanges upserts")
-    enforceUniques(upserts, spark, path, declared, Nil, m,
-      "applyChanges upserts (within-batch)")
-    warnUncoveredUniques(m, keys, "applyChanges")
-    require(upserts.filter(pcs.map(col(_).isNull).reduce(_ || _))
-      .limit(1).collect().isEmpty,
-      s"TxLog.applyChanges: null ${pcs.mkString("/")} values are not supported")
-    val deletes = feed.filter(col("_change_type") === "delete")
-      .select(keys.map(col): _*)
-    // file-granular like [[mergeInto]]: the rewrite set is exactly the
-    // FILES currently holding a changed key (covers deletes and the
-    // old side of a moved key); upsert rows for keys the table lacks
-    // simply land as new files. One key-pruned semi-join scan.
-    val feedKeys = feed.select(keys.map(col): _*).distinct()
-    val hitFiles = discoverHitFiles(spark, path, m, m.files,
-      _.join(feedKeys, keys, "left_semi"))
-    if (hitFiles.isEmpty && upserts.limit(1).collect().isEmpty)
-      return sealNoopTxn(spark, path, m, txn, "APPLY CHANGES")
-    val hitRows = readFiles(spark, path, m, hitFiles.toSeq)
-    val merged = graft.operators.Upsert.mergeByKey(
-      hitRows.join(deletes, keys, "left_anti"), upserts, keys,
-      preValidated = true)
-    val newFiles = stageIn(toPhysical(merged, m.colMap), path, physPartCols(m), transformsOf(m))
-    // file-granular read declaration (see mergeRebaseCheck): the feed
-    // key bounds admit concurrently-added files outside the changed
-    // key range, so disjoint CDC lanes into one table don't serialize
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val keyBounds = keyStatsBounds(feed, m, declared, keys).flatten
-    // write-time CDC: the feed re-expressed as the EFFECT on this
-    // table (a feed "insert" for a key the replica already holds is an
-    // update here; a "delete" for an absent key is no event)
-    val cdc = captureCdc(spark, path, m, {
-      val oldMatched = hitRows.join(feedKeys, keys, "left_semi")
-      val oldKeys = oldMatched.select(keys.map(col): _*).distinct()
-      val upKeys = upserts.select(keys.map(col): _*).distinct()
-      def shaped(d: DataFrame, t: String) =
-        d.select(declared.fieldNames.map(col).toIndexedSeq
-          :+ lit(t).as("_change_type"): _*)
-      shaped(oldMatched.join(deletes, keys, "left_semi"), "delete")
-        .unionByName(shaped(oldMatched.join(upKeys, keys, "left_semi"),
-          "update_preimage"))
-        .unionByName(shaped(upserts.join(oldKeys, keys, "left_semi"),
-          "update_postimage"))
-        .unionByName(shaped(upserts.join(oldKeys, keys, "left_anti"),
-          "insert"))
-    })
-    commitRebase(spark, path, m, rewriteDirs = Set.empty,
-      newFiles = newFiles, schemaDdl = m.schemaDdl, batchId = None,
-      readSet = None, operation = "APPLY CHANGES", removeFiles = hitFiles,
-      txn = txn, rebaseCheck = Some(mergeRebaseCheck(declared, keyBounds,
-        sourceEmpty = false, m.files.toSet, hitFiles, tz)), cdc = cdc)
+    val upsert = Some("src._change_type IN ('insert', 'update')")
+    mergeClauses(MergeEntry("applyChanges", "APPLY CHANGES", "feed"), path, m,
+      feed, keys,
+      matched = Seq(MergeClause(Some("src._change_type = 'delete'"), "delete"),
+        MergeClause(upsert, "update", setAll(declared.fieldNames.toSeq))),
+      notMatched = Seq(MergeClause(upsert, "insert")), notMatchedBySource = Nil,
+      deletionVectors = false, txn, evolveSchema = false, preValidated)
   }
 
   /** [[applyChanges]]' KEYLESS sibling — the consumer for the

@@ -111,14 +111,50 @@ object PlanDump {
           .filter(col("chr") === 1L && col("pos").between(120L, 140L))
       },
     )
-    val body = picks.map { case (name, df) =>
-      s"## $name\n\n```\n${df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))}```\n"
-    }.mkString("\n")
+    val out = Paths.get("docs/PLANS.md")
+    // sections of the current file that no pick generates (hand-written
+    // notes) carry over verbatim, in their order, after the plans
+    val names = picks.map(_._1).toSet
+    val kept =
+      if (!Files.exists(out)) Nil
+      else sections(Files.readString(out)).filterNot(s => names(s._1)).map(_._2)
+    val body = (picks.map { case (name, df) =>
+      stable(s"## $name\n\n```\n${df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))}```\n")
+    } ++ kept).mkString("\n")
     Files.createDirectories(Paths.get("docs"))
-    Files.writeString(Paths.get("docs/PLANS.md"),
+    Files.writeString(out,
       "# Physical plans of flagship queries (sf0.001, auto-generated by graft.tools.PlanDump)\n\n" + body)
     println("[plandump] wrote docs/PLANS.md")
     spark.stop()
+  }
+
+  /** The `## `-headed sections of a PLANS.md text as (heading, text),
+    * each text ending in exactly one newline. */
+  private[tools] def sections(doc: String): Seq[(String, String)] =
+    doc.split("(?m)^(?=## )").toSeq.filter(_.startsWith("## ")).map { s =>
+      (s.linesIterator.next().stripPrefix("## "), s.replaceAll("\\s+$", "") + "\n")
+    }
+
+  private val SparkIds = "(#|plan_id=|RDD\\[|\\bx_)(\\d+)".r // x_: lambda variables
+  private val Tokens = Seq(
+    "(?<=[\\w$])@[0-9a-f]{4,8}\\b" -> "@<hash>", // identity hash codes ([B@…)
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}" -> "<uuid>",
+    "\\b[0-9a-f]{8}-[0-9a-f]{3}\\b" -> "<id>", // TxLog commit-file ids
+    "(plandump_[a-z]+)\\d+" -> "$1") // temp-dir suffixes
+
+  /** One section with its run-dependent text made stable: expression,
+    * plan, RDD and lambda-variable ids (allocated per JVM) renumber in
+    * first-seen order, and object hashes, uuids and temp-dir suffixes
+    * become fixed tokens — so a regeneration differs only where a plan
+    * changed. */
+  private[tools] def stable(section: String): String = {
+    val seen = scala.collection.mutable.Map.empty[String, scala.collection.mutable.Map[String, Int]]
+    val renumbered = SparkIds.replaceAllIn(section, m => {
+      val ids = seen.getOrElseUpdate(m.group(1), scala.collection.mutable.Map.empty)
+      scala.util.matching.Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size))
+    })
+    Tokens.foldLeft(renumbered) { case (s, (re, token)) => s.replaceAll(re, token) }
   }
 }

@@ -6,11 +6,12 @@ import graft.SparkSpec
 
 /** Each row-changing TxLog verb runs a bounded number of Spark jobs on
   * one fixed small table: discovery, the DV sidecar write and count,
-  * staging, stats and the commit. The bounds are the counts measured
-  * before the verbs' shared discovery and sidecar code was factored
-  * out — a rewrite of that code must not add a job to any verb — less
-  * the schema-inference job each DV sidecar read ran before sidecars
-  * were read with their fixed schema.
+  * staging, stats and the commit. The bounds are measured counts — a
+  * rewrite of the shared discovery, sidecar or merge code must not add
+  * a job to any verb. The keyed merges (mergeInto, applyChanges and
+  * both mergeWhen modes) run one clause engine, whose validation
+  * aggregate also yields the key bounds and whose scratch sets are read
+  * back with the schema they were written with.
   */
 class TxLogVerbJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -51,19 +52,22 @@ class TxLogVerbJobsSpec extends SparkSpec {
       TxLog.deleteWhere(spark, p, col("k") === 3L, deletionVectors = true)),
     ("updateWhere", 5, p =>
       TxLog.updateWhere(spark, p, Seq("v" -> "v + 1"), col("k") === 4L)),
-    ("updateWhere(dv)", 9, p => TxLog.updateWhere(spark, p, Seq("v" -> "v + 1"),
+    ("updateWhere(dv)", 7, p => TxLog.updateWhere(spark, p, Seq("v" -> "v + 1"),
       col("k") === 4L, deletionVectors = true)),
     ("replaceWhere", 7, p => TxLog.replaceWhere(
       Seq((1L, "p1", 10.0), (9L, "p1", 9.0)).toDF("k", "part", "v"), p,
       col("part") === "p1")),
-    ("mergeInto", 13, p => TxLog.mergeInto(p, upd.toDF("k", "part", "v"), Seq("k"))),
+    ("mergeInto", 12, p => TxLog.mergeInto(p, upd.toDF("k", "part", "v"), Seq("k"))),
     ("mergeInto(dv)", 13, p => TxLog.mergeInto(p, upd.toDF("k", "part", "v"),
       Seq("k"), deletionVectors = true)),
-    ("mergeWhen(dv)", 18, p => TxLog.mergeWhen(p, upd.toDF("k", "part", "v"), Seq("k"),
+    ("mergeWhen", 12, p => TxLog.mergeWhen(p, upd.toDF("k", "part", "v"), Seq("k"),
+      matched = Seq(TxLog.MergeClause(None, "update", Seq("v" -> "src.v"))),
+      notMatched = Seq(TxLog.MergeClause(None, "insert")))),
+    ("mergeWhen(dv)", 13, p => TxLog.mergeWhen(p, upd.toDF("k", "part", "v"), Seq("k"),
       matched = Seq(TxLog.MergeClause(None, "update", Seq("v" -> "src.v"))),
       notMatched = Seq(TxLog.MergeClause(None, "insert")),
       deletionVectors = true)),
-    ("applyChanges", 13, p => TxLog.applyChanges(p,
+    ("applyChanges", 12, p => TxLog.applyChanges(p,
       Seq((2L, "p0", 20.0, "update"), (9L, "p1", 9.0, "insert"),
         (3L, "p1", 3.0, "delete")).toDF("k", "part", "v", "_change_type"),
       Seq("k"))),
